@@ -60,9 +60,9 @@ def main() -> None:
         print(json.dumps({"mode": mode, "sf": SF_DIR, "queries": list(names)}))
         return
 
-    def run_once(fn):
+    def run_once(name, fn):
         spark.catalog.clearCache()
-        spark.sparkContext.setJobDescription(None)
+        spark.sparkContext.setJobDescription(name)
         t0 = time.monotonic()
         if mode == "noop":
             fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
@@ -73,10 +73,9 @@ def main() -> None:
 
     for name in names:
         fn, _sql = REGISTRY[name]
-        spark.sparkContext.setJobDescription(name)
         best, n = None, 0
         for _ in range(2):
-            dt, n = run_once(fn)
+            dt, n = run_once(name, fn)
             best = dt if best is None or dt < best else best
             if best <= 1.0:
                 break

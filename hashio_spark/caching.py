@@ -1,8 +1,9 @@
 """Release handles for operator-internal persisted intermediates.
 
-Several operators (banded LSH in ``operators/dedupe``,
-``operators/similarity``, and their oracle twins in ``queries``) persist a
-narrow intermediate because it feeds multiple consumers inside the returned
+Several operators (the banded LSH callers of the one MinHash-LSH core in
+``operators/dedupe`` — its xxhash64 operators and the md5 oracle-parity
+queries in ``queries`` — plus ``operators/similarity``) persist a narrow
+intermediate because it feeds multiple consumers inside the returned
 plan — without the persist, Catalyst recomputes the whole upstream per
 consumer (measured 33 s → 7 s at sf0.1).  The persist must outlive the
 operator call (the caller hasn't run an action yet), so the operator cannot

@@ -6,8 +6,8 @@ the n-gram-overlap decontamination used by most published LLM training
 pipelines.  Expressed Spark-first:
 
 * both sides are tokenized and shingled with the SAME staged projections
-  as the MinHash family (``functions.text.word_shingles_from_tokens`` —
-  bound-attribute staging, no interpreted-lambda recompute);
+  as the MinHash family (``dedupe.shingle_sets`` — bound-attribute
+  staging, no interpreted-lambda recompute);
 * the benchmark side (eval suites: thousands of docs) collapses to a
   DISTINCT shingle set and is **broadcast** — the trillion-row training
   side is never shuffled for the join;
@@ -17,6 +17,11 @@ pipelines.  Expressed Spark-first:
 * ``hashed=True`` joins on ``xxhash64(shingle)`` (8-byte keys, the scale
   path); ``hashed=False`` joins on raw shingle strings (oracle-parity
   path — replicable in any SQL engine).
+
+The paraphrase-level :func:`crosscorpus_neardup` is a thin caller of the
+MinHash-LSH core in ``operators/dedupe`` (band schema, bipartite gate,
+rounded Jaccard verify), shared with the md5 oracle twin
+``queries.crosscorpus_neardup_q``.
 
 Extends the reference's dedupe family (``/root/reference/lib/hashio/
 encoder.py:463-500``) from identical-content to cross-corpus n-gram
@@ -29,12 +34,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hashio_spark.caching import track
-from hashio_spark.functions.text import word_shingles_from_tokens
+from hashio_spark.operators.dedupe import (
+    band_bipartite_join,
+    jaccard_verify,
+    minhash_band_values,
+    minhash_signatures,
+    shingle_sets,
+)
 
 
 def _doc_grams(df: DataFrame, key_col: str, text_col: str, k: int, hashed: bool) -> DataFrame:
-    toked = df.select(F.col(key_col).alias("key"), F.split(F.col(text_col), r"\s+").alias("_toks"))
-    shingled = toked.select("key", F.array_distinct(word_shingles_from_tokens("_toks", k)).alias("_sh"))
     # explode_OUTER + post-filter, not explode: Catalyst's
     # InferFiltersFromGenerate adds `size(child)>0 AND isnotnull(child)`
     # below a plain explode, and predicate pushdown substitutes the WHOLE
@@ -43,7 +52,7 @@ def _doc_grams(df: DataFrame, key_col: str, text_col: str, k: int, hashed: bool)
     # 0.45 s at sf0.1).  explode_outer gets no inferred filter; empty
     # docs surface one NULL gram dropped on the GENERATED attribute,
     # which cannot be pushed below the Generate.  (BENCH.md finding #8.)
-    g = shingled.select("key", F.explode_outer("_sh").alias("gram")).filter(
+    g = shingle_sets(df, key_col, text_col, k).select("key", F.explode_outer("sh").alias("gram")).filter(
         F.col("gram").isNotNull()
     )
     if hashed:
@@ -98,73 +107,28 @@ def crosscorpus_neardup(
     (a reworded eval question shares few exact 3-grams but most of its
     shingle set).
 
-    Scale shape (train = 10^12 docs, benchmark = 10^4..10^6):
-    * both corpora band through the SAME ``minhash_band_values``
-      expression — signatures are per-row projections, no shuffle;
-    * the benchmark band table is tiny → **broadcast hash join**: the
-      train corpus is never shuffled, the bipartite candidate join is
-      map-side (vs the self-join path, which must shuffle on band);
-    * the band-size cap applies to the TRAIN side (the only side that
-      can blow up a bucket), but sizes are counted AFTER a broadcast
-      semi-join against the benchmark bands: a band absent from the
-      benchmark yields no candidates regardless of cap, so restricting
-      the count to bench-present bands is output-identical while
-      shrinking the size aggregation's input from 10^12 × n_bands rows
-      (a full shuffle of the banded corpus) to just the matching slice;
-    * candidates then pass exact Jaccard ≥ ``min_jaccard`` with the
-      benchmark shingle sets ALSO broadcast.
+    Scale shape (train = 10^12 docs, benchmark = 10^4..10^6): both
+    corpora band through the SAME ``minhash_band_values`` expression
+    (per-row projections, no shuffle); ``dedupe.band_bipartite_join``
+    broadcasts the tiny benchmark band table, so the train corpus is
+    never shuffled for the candidate join, and caps train band sizes
+    counted over the bench-present slice only; candidates then pass the
+    rounded exact Jaccard ≥ ``min_jaccard`` with the benchmark shingle
+    sets ALSO broadcast.
 
     Returns all (train, bench, jaccard) matches; anti-join ``train``
     against ``.select(key_col)`` of the result to drop flagged docs.
     """
-    from hashio_spark.functions.text import word_shingles_from_tokens
-    from hashio_spark.operators.dedupe import minhash_band_values, minhash_signatures
 
-    t_bands = minhash_band_values(
-        minhash_signatures(train, key_col, text_col, n_perm=n_perm, shingle_k=shingle_k),
-        n_bands=n_bands, n_perm=n_perm,
-    )
-    b_bands = minhash_band_values(
-        minhash_signatures(benchmark, key_col, text_col, n_perm=n_perm, shingle_k=shingle_k),
-        n_bands=n_bands, n_perm=n_perm,
-    )
-    bench_bands = F.broadcast(b_bands.withColumnRenamed("key", "bench_key"))
-    # only bands the benchmark actually occupies can produce candidates —
-    # count sizes over that (tiny) slice, not the full banded corpus.
-    # hits feeds two consumers (sizes + ok); persisted so the minhash
-    # upstream runs once — caller releases via hashio_spark.caching.release
-    hits = t_bands.join(
-        F.broadcast(b_bands.select("band_id", "band_val").distinct()),
-        ["band_id", "band_val"],
-        "left_semi",
-    ).persist()
-    sizes = hits.groupBy("band_id", "band_val").agg(F.count(F.lit(1)).alias("n"))
-    ok = hits.join(
-        F.broadcast(sizes.filter(F.col("n") <= max_band_size)),
-        ["band_id", "band_val"],
-    )
-    cand = (
-        ok.join(bench_bands, ["band_id", "band_val"])
-        .select(F.col("key").alias("train_key"), "bench_key")
-        .distinct()
-    )
+    def bands(df: DataFrame) -> DataFrame:
+        sig = minhash_signatures(df, key_col, text_col, n_perm=n_perm, shingle_k=shingle_k)
+        return minhash_band_values(sig, n_bands=n_bands, n_perm=n_perm)
 
-    def _sets(df: DataFrame, out: str) -> DataFrame:
-        toked = df.select(
-            F.col(key_col).alias(out), F.split(F.col(text_col), r"\s+").alias("_toks")
-        )
-        return toked.select(
-            out, F.array_distinct(word_shingles_from_tokens("_toks", shingle_k)).alias(f"_sh_{out}")
-        )
-
-    j = cand.join(_sets(train, "train_key"), "train_key").join(
-        F.broadcast(_sets(benchmark, "bench_key")), "bench_key"
-    )
-    inter = F.size(F.array_intersect(F.col("_sh_train_key"), F.col("_sh_bench_key"))).cast("double")
-    union = F.size(F.array_union(F.col("_sh_train_key"), F.col("_sh_bench_key"))).cast("double")
-    jac = F.round(inter / union, 6)
-    out = (
-        j.select("train_key", "bench_key", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= min_jaccard)
+    cand, hits = band_bipartite_join(bands(train), bands(benchmark), max_band_size)
+    out = jaccard_verify(
+        cand.withColumnsRenamed({"key_a": "train_key", "key_b": "bench_key"}),
+        shingle_sets(train, key_col, text_col, shingle_k),
+        F.broadcast(shingle_sets(benchmark, key_col, text_col, shingle_k)),
+        min_jaccard,
     )
     return track(out, hits)

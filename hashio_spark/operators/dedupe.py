@@ -22,6 +22,20 @@ Five tiers, all shuffle-architected for 10^12-row inputs:
 * :func:`embedding_neardup_pairs` — cosine near-dup over an embedding
   column; brute-force for candidates, see ``operators/similarity`` for
   the LSH-bucketed scale path.
+
+This module also holds the ONE MinHash-LSH core that every MinHash LSH
+path calls, whatever its signature hash: the band schema
+(:func:`explode_bands`, ``(key, band_id, band_val)``), the capped band
+self-join (:func:`band_self_join`), the broadcast bipartite gate
+(:func:`band_bipartite_join`) and the rounded Jaccard verify
+(:func:`jaccard_verify`).  Callers are :func:`lsh_candidate_pairs`,
+``operators/decontaminate.crosscorpus_neardup`` (xxhash64 signatures
+from :func:`minhash_signatures`) and the md5 oracle-parity queries in
+``queries`` (``dedupe_minhash_lsh``, ``ngram_jaccard``,
+``ngram_containment``, ``crosscorpus_neardup``), which differ only in
+the signature kernel.  The hyperplane-LSH embedding near-dup paths
+(``operators/similarity.neardup_pairs``, the ``embedding_neardup*``
+queries) band into the same schema and share the self-join.
 """
 
 from __future__ import annotations
@@ -131,16 +145,17 @@ def minhash_signatures(df: DataFrame, key_col: str, text_col: str, n_perm: int =
 
 
 def minhash_band_values(sig_df: DataFrame, n_bands: int = 4, n_perm: int = 16) -> DataFrame:
-    """(key, band_id, band_val) from a MinHash signature column — the
-    shared banding step of the self-join (:func:`lsh_candidate_pairs`)
-    and the cross-corpus (``decontaminate.crosscorpus_neardup``) LSH
-    paths.  Both corpora of a bipartite join MUST band through the same
-    expression or their bucket spaces never collide.
+    """(key, band_id, band_val) from a MinHash signature column: band i
+    is ``xxhash64(i, <its rows_per_band signature entries>)``.
 
     Null-signature rows (shingle-less docs) are nulled INSIDE the band
-    expression and filtered on the generated attribute after the explode
-    — see :func:`lsh_candidate_pairs` for why a pre-filter on ``sig``
-    would re-run the minhash pipeline per row."""
+    expression and dropped by :func:`explode_bands` on the generated
+    attribute: concat_ws skips NULLs, so they would otherwise all share
+    one band value per band_id and be emitted as bogus near-dup pairs of
+    each other, and a pre-filter on ``sig`` would be substituted through
+    the signature projection by predicate pushdown, re-running the whole
+    tokenize→shingle→minhash pipeline per row just to test nullness
+    (BENCH.md finding #8)."""
     if n_perm % n_bands != 0:
         raise ValueError(f"n_perm={n_perm} must be divisible by n_bands={n_bands}")
     rows_per_band = n_perm // n_bands
@@ -156,64 +171,133 @@ def minhash_band_values(sig_df: DataFrame, n_bands: int = 4, n_perm: int = 16) -
             )
         )
 
+    return explode_bands(sig_df, "key", [band(i) for i in range(n_bands)])
+
+
+# ---------------------------------------------------------------------------
+# MinHash-LSH core, independent of the signature hash: both tiers (the
+# xxhash64 operators here and the md5 oracle-parity queries) band into
+# the same (key, band_id, band_val) schema and share these steps.
+# ---------------------------------------------------------------------------
+
+
+def explode_bands(df: DataFrame, key_col: str, bands: list[Column]) -> DataFrame:
+    """(key, band_id, band_val): one row per non-null band value, all
+    bands from ONE pass over ``df`` (band_id = position in ``bands``).
+    The null filter sits on the generated attribute, so it can never be
+    pushed below the Generate into the signature pipeline."""
     return (
-        sig_df.select(
-            "key",
-            F.explode(
-                F.array(*[F.struct(F.lit(i).alias("band_id"), band(i).alias("band_val")) for i in range(n_bands)])
-            ).alias("b"),
-        )
-        .select("key", F.col("b.band_id").alias("band_id"), F.col("b.band_val").alias("band_val"))
+        df.select(F.col(key_col).alias("key"), F.posexplode(F.array(*bands)).alias("band_id", "band_val"))
         .filter(F.col("band_val").isNotNull())
     )
+
+
+def band_self_join(bands: DataFrame, max_band: int) -> DataFrame:
+    """(key_a, key_b), key_a < key_b: every pair of docs sharing a band
+    whose population n satisfies ``1 < n <= max_band``.  The cap drops
+    degenerate bands (a boilerplate cluster of size c would emit c²
+    pairs); a pair sharing several bands is emitted once.
+
+    Persists nothing: ``bands`` feeds three consumers (sizes and both
+    join sides), so callers persist it or its upstream signature frame
+    themselves, or Catalyst recomputes the minhash pipeline per consumer
+    (measured 33 s → 7 s at sf0.1)."""
+    on = ["band_id", "band_val"]
+    sizes = bands.groupBy(*on).agg(F.count(F.lit(1)).alias("n"))
+    ok = bands.join(sizes.filter((F.col("n") > 1) & (F.col("n") <= max_band)), on)
+    a = ok.select(F.col("key").alias("key_a"), *on)
+    b = ok.select(F.col("key").alias("key_b"), *on)
+    return a.join(b, on).filter(F.col("key_a") < F.col("key_b")).select("key_a", "key_b").distinct()
+
+
+def band_bipartite_join(bands: DataFrame, bench_bands: DataFrame, max_band: int) -> tuple[DataFrame, DataFrame]:
+    """(candidates, hits): candidate pairs (key_a, key_b) of a large
+    corpus ``bands`` against a small broadcast corpus ``bench_bands``.
+
+    The large side is never shuffled for the join.  Band sizes are
+    capped (``n <= max_band``; no ``n > 1`` rule, a lone train doc still
+    pairs with its bench docs) on the large side only, and are counted
+    AFTER a broadcast semi-join against the bench bands: a band absent
+    from the bench yields no candidates whatever the cap, so restricting
+    the count to bench-present bands is output-identical while shrinking
+    the size aggregation's input from the whole banded corpus to the
+    matching slice.
+
+    ``hits`` (the semi-joined slice) feeds two consumers and is
+    persisted; callers attach it to their result with
+    ``caching.track`` and release it after their action."""
+    on = ["band_id", "band_val"]
+    hits = bands.join(F.broadcast(bench_bands.select(*on).distinct()), on, "left_semi").persist()
+    sizes = hits.groupBy(*on).agg(F.count(F.lit(1)).alias("n"))
+    ok = hits.join(F.broadcast(sizes.filter(F.col("n") <= max_band)), on)
+    cand = (
+        ok.join(F.broadcast(bench_bands.withColumnRenamed("key", "key_b")), on)
+        .select(F.col("key").alias("key_a"), "key_b")
+        .distinct()
+    )
+    return cand, hits
+
+
+def shingle_sets(df: DataFrame, key_col: str, text_col: str, shingle_k: int = 3) -> DataFrame:
+    """(key, sh): each doc's DISTINCT word-shingle set, tokenized on
+    ``\\s+`` exactly as :func:`minhash_signatures` does.  Staged
+    projections per BENCH.md finding #7."""
+    from hashio_spark.functions.text import word_shingles_from_tokens
+
+    toked = df.select(F.col(key_col).alias("key"), F.split(F.col(text_col), r"\s+").alias("_toks"))
+    return toked.select("key", F.array_distinct(word_shingles_from_tokens("_toks", shingle_k)).alias("sh"))
+
+
+def pair_sets(cand: DataFrame, a_sets: DataFrame, b_sets: DataFrame) -> DataFrame:
+    """(ka, kb, sh_a, sh_b): the two key columns of ``cand`` joined to
+    each side's (key, sh) shingle sets.  A broadcast hint on a side's
+    sets frame carries through to its join."""
+    ka, kb = cand.columns
+    a = a_sets.select(F.col("key").alias(ka), F.col("sh").alias("sh_a"))
+    b = b_sets.select(F.col("key").alias(kb), F.col("sh").alias("sh_b"))
+    return cand.join(a, ka).join(b, kb)
+
+
+def jaccard(a: Column | str, b: Column | str) -> Column:
+    """|A∩B| / |A∪B| of two array columns; 0.0 when both are empty."""
+    inter = F.size(F.array_intersect(a, b)).cast("double")
+    union = F.size(F.array_union(a, b)).cast("double")
+    return inter / F.greatest(union, F.lit(1.0))
+
+
+def jaccard_verify(cand: DataFrame, a_sets: DataFrame, b_sets: DataFrame, threshold: float) -> DataFrame:
+    """(ka, kb, jaccard): candidate pairs whose shingle-set Jaccard,
+    rounded to 6 digits as the oracle SQL rounds it, is >= ``threshold``
+    (arguments as :func:`pair_sets`)."""
+    ka, kb = cand.columns
+    j = pair_sets(cand, a_sets, b_sets)
+    return j.select(ka, kb, F.round(jaccard("sh_a", "sh_b"), 6).alias("jaccard")).filter(
+        F.col("jaccard") >= threshold
+    )
+
 
 
 def lsh_candidate_pairs(
     sig_df: DataFrame, n_bands: int = 4, max_band_size: int = 64, n_perm: int = 16
 ) -> DataFrame:
-    """Candidate near-dup pairs from banded LSH over a signature column.
+    """Candidate near-dup pairs (key_a, key_b) from banded LSH over a
+    signature column (:func:`minhash_band_values` + :func:`band_self_join`).
 
     Bands hash ``rows_per_band`` consecutive signature entries; docs
     sharing any band value become a candidate pair.  ``max_band_size``
-    drops degenerate bands (quadratic-blowup guard; log what was dropped
-    via the returned metrics if needed).  ``n_perm`` must match the
-    signature width from :func:`minhash_signatures` and divide evenly
-    into ``n_bands`` — banding a prefix of a wider signature would
-    silently degrade recall.
-
-    Shingle-less docs (signature entries all NULL) are dropped:
-    concat_ws skips NULLs, so they would otherwise all share one band
-    value per band_id and be emitted as bogus near-dup pairs of each
-    other.  The drop happens INSIDE the band expression (null signature →
-    null band_val, filtered on the generated attribute after the
-    explode), not as a pre-filter on ``sig``: predicate pushdown would
-    substitute the filter through the signature projection and re-run
-    the whole tokenize→shingle→minhash pipeline per row just to test
-    nullness (the BENCH.md finding-#8 shape); a filter on the exploded
-    output cannot sink below the Generate.
+    drops degenerate bands (quadratic-blowup guard).  ``n_perm`` must
+    match the signature width from :func:`minhash_signatures` and divide
+    evenly into ``n_bands`` — banding a prefix of a wider signature would
+    silently degrade recall.  Shingle-less docs are never paired.
     """
-    bands = minhash_band_values(sig_df, n_bands=n_bands, n_perm=n_perm)
-    # bands feeds THREE consumers (sizes + both self-join sides); without a
-    # persist Catalyst recomputes the whole minhash upstream per consumer —
-    # measured 33 s → 7 s at sf0.1.  The persisted projection is narrow
-    # (key, band_id, band_val), O(n_docs × n_bands) rows.  The handle is
-    # tracked on the returned DataFrame: callers release it after their
-    # consuming action via hashio_spark.caching.release(result).
-    bands = bands.persist()
-
-    sizes = bands.groupBy("band_id", "band_val").agg(F.count(F.lit(1)).alias("n"))
-    ok = bands.join(sizes.filter((F.col("n") > 1) & (F.col("n") <= max_band_size)), ["band_id", "band_val"])
-    a = ok.select(F.col("key").alias("key_a"), "band_id", "band_val")
-    b = ok.select(F.col("key").alias("key_b"), "band_id", "band_val")
-    out = (
-        a.join(b, ["band_id", "band_val"])
-        .filter(F.col("key_a") < F.col("key_b"))
-        .select("key_a", "key_b")
-        .distinct()
-    )
+    # The persisted projection is narrow (key, band_id, band_val),
+    # O(n_docs × n_bands) rows.  The handle is tracked on the returned
+    # DataFrame: callers release it after their consuming action via
+    # hashio_spark.caching.release(result).
     from hashio_spark.caching import track
 
-    return track(out, bands)
+    bands = minhash_band_values(sig_df, n_bands=n_bands, n_perm=n_perm).persist()
+    return track(band_self_join(bands, max_band_size), bands)
 
 
 def ngram_jaccard_pairs(
@@ -221,21 +305,13 @@ def ngram_jaccard_pairs(
     shingle_k: int = 3, threshold: float = 0.7,
 ) -> DataFrame:
     """Exact shingle-set Jaccard on candidate pairs → (key_a, key_b,
-    jaccard).  Two broadcast-able joins bring in each side's shingle set;
-    intersection/union via array functions (no UDF, no explode)."""
-    from hashio_spark.functions.text import word_shingles_from_tokens
-
-    sets_ = docs.select(
-        F.col(key_col).alias("key"), F.split(F.col(text_col), r"\s+").alias("_toks")
-    ).select("key", F.array_distinct(word_shingles_from_tokens("_toks", shingle_k)).alias("sh"))
-    a = sets_.withColumnRenamed("key", "key_a").withColumnRenamed("sh", "sh_a")
-    b = sets_.withColumnRenamed("key", "key_b").withColumnRenamed("sh", "sh_b")
-    j = candidates.join(a, "key_a").join(b, "key_b")
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b"))).cast("double")
-    union = F.size(F.array_union(F.col("sh_a"), F.col("sh_b"))).cast("double")
-    return (
-        j.select("key_a", "key_b", (inter / F.greatest(union, F.lit(1.0))).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+    jaccard), unrounded.  Two broadcast-able joins bring in each side's
+    shingle set; intersection/union via array functions (no UDF, no
+    explode)."""
+    sets_ = shingle_sets(docs, key_col, text_col, shingle_k)
+    j = pair_sets(candidates.select("key_a", "key_b"), sets_, sets_)
+    return j.select("key_a", "key_b", jaccard("sh_a", "sh_b").alias("jaccard")).filter(
+        F.col("jaccard") >= threshold
     )
 
 

@@ -21,6 +21,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, LongType
 
+from hashio_spark.operators.dedupe import band_self_join
+
 
 def as_double_vec(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
@@ -242,18 +244,7 @@ def neardup_pairs(
             "band_id", "band_val"
         ),
     ).persist()
-    sizes = bands.groupBy("band_id", "band_val").agg(F.count(F.lit(1)).alias("n"))
-    ok = bands.join(
-        sizes.filter((F.col("n") > 1) & (F.col("n") <= max_bucket)), ["band_id", "band_val"]
-    )
-    a = ok.select(F.col("key").alias("key_a"), "band_id", "band_val")
-    b = ok.select(F.col("key").alias("key_b"), "band_id", "band_val")
-    cand = (
-        a.join(b, ["band_id", "band_val"])
-        .filter(F.col("key_a") < F.col("key_b"))
-        .select("key_a", "key_b")
-        .distinct()
-    )
+    cand = band_self_join(bands, max_bucket)
     va = base.select(F.col("key").alias("key_a"), F.col("v").alias("v_a"), F.col("nrm").alias("n_a"))
     vb = base.select(F.col("key").alias("key_b"), F.col("v").alias("v_b"), F.col("nrm").alias("n_b"))
     out = (

@@ -20,10 +20,18 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hashio_spark.caching import track
 from hashio_spark.functions.canonical import composite_digest_expr
 from hashio_spark.functions.digests import digest_expr
 from hashio_spark.operators import drift as drift_ops
 from hashio_spark.operators import verify as verify_ops
+from hashio_spark.operators.dedupe import (
+    band_bipartite_join,
+    band_self_join,
+    explode_bands,
+    jaccard_verify,
+    pair_sets,
+)
 
 # ---------------------------------------------------------------------------
 # helpers
@@ -318,27 +326,49 @@ def minhash_signature(
     unguarded ``sequence(1, size-2)`` is DESCENDING for short docs and
     crashes ``slice``; DuckDB's ``generate_series(1,0)`` is empty, so the
     guard also keeps the two engines in agreement)."""
+    return _minhash_md5(_t(spark, sf_dir, "documents"), drop_short=drop_short, with_sets=with_sets)
+
+
+def _minhash_md5(d: DataFrame, *carry: str, drop_short: bool, with_sets: bool) -> DataFrame:
+    """(doc_id, *carry, [sh], sig0..sig3): the md5 signature frame of
+    every md5 LSH query.
+
+    ``drop_short`` drops docs with <3 tokens (exactly the NULL-signature
+    docs) with a scan-column filter — one split at the scan — so
+    downstream LSH never needs a sig-null check: a null test on the
+    signature alias would push down through the signature projection and
+    re-evaluate the whole shingle+md5 pipeline per row (BENCH.md finding
+    #8).  ``with_sets`` rides the distinct shingle set along for
+    verify-stage consumers, so one materialization serves banding AND
+    exact verification."""
     from hashio_spark.functions.digests import minhash4_md5_arrow
 
-    d = _t(spark, sf_dir, "documents")
     if drop_short:
-        # scan-column filter (one split at the scan) so downstream LSH
-        # never needs a sig-null check that would re-run the md5 pipeline
         d = d.filter(F.size(F.split(F.col("text"), " ")) >= 3)
     # the whole text → shingles → 4×(md5, min) pipeline runs in ONE Arrow
     # kernel (functions/digests.minhash4_md5_arrow): the former JVM form
     # paid four interpreted higher-order md5 passes through the JCA lock
     # (BENCH.md finding #1) — measured 2.0 s → 1.0 s at sf1.0 for
-    # byte-identical output.  ``with_sets`` rides the distinct shingle
-    # set along for verify-stage consumers (ngram_jaccard /
-    # ngram_containment) so one materialization serves banding AND exact
-    # verification.
-    s = d.select("doc_id", minhash4_md5_arrow(with_sets)(F.col("text")).alias("_s"))
-    cols = [F.col("doc_id")]
-    if with_sets:
-        cols.append(F.col("_s.sh").alias("sh"))
-    cols += [F.col(f"_s.sig{k}").alias(f"sig{k}") for k in range(4)]
-    return s.select(*cols)
+    # byte-identical output.
+    s = d.select("doc_id", *carry, minhash4_md5_arrow(with_sets)(F.col("text")).alias("_s"))
+    sets = [F.col("_s.sh").alias("sh")] if with_sets else []
+    return s.select("doc_id", *carry, *sets, *[F.col(f"_s.sig{k}").alias(f"sig{k}") for k in range(4)])
+
+
+# band-size cap of every md5 LSH query; the oracle SQL spells it as 64
+_MD5_MAX_BAND = 64
+
+
+def _md5_bands(sig: DataFrame) -> DataFrame:
+    """(key, band_id, band_val) of an md5 signature frame: 2 bands of 2
+    signatures, ``band_val = sigA_sigB``.  The oracle SQL's band string
+    ``'b<band_id>_sigA_sigB'`` is the same equality."""
+    return explode_bands(sig, "doc_id", [F.concat_ws("_", "sig0", "sig1"), F.concat_ws("_", "sig2", "sig3")])
+
+
+def _md5_sets(sig: DataFrame) -> DataFrame:
+    """(key, sh) shingle sets of a ``with_sets`` md5 signature frame."""
+    return sig.select(F.col("doc_id").alias("key"), "sh")
 
 
 MINHASH_SIGNATURE_SQL = """
@@ -361,56 +391,27 @@ def dedupe_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup candidate pairs: docs agreeing on any MinHash band
     (banding = 2 sigs/band over the 4-sig signature).
 
-    Bands shared by more than MAX_BAND docs are dropped — the standard
-    LSH guard against quadratic blowup on degenerate/boilerplate clusters
-    (the synthetic corpus has a tiny vocabulary, so uncapped banding
-    explodes at sf≥0.1).  The cap is part of the operator contract and is
-    replicated exactly in the oracle SQL."""
-    MAX_BAND = 64
-    # shingle-less docs (<3 tokens) carry NULL signatures; drop them before
-    # banding or concat_ws's null-skip would co-band every short doc.
-    # The drop tests TOKEN COUNT on the scan column, not sig0 IS NOT
-    # NULL: a null-check on the signature alias pushes down through the
-    # signature projection and re-evaluates the whole shingle+md5
-    # pipeline per row just for the check (BENCH.md finding #8), while
-    # size(split(text)) evaluates one cheap split at the scan — and sig0
-    # is null exactly iff the doc has <3 tokens.
-    pairs, enr = _lsh_candidate_pairs(spark, sf_dir, MAX_BAND)
-    from hashio_spark.caching import track
-
+    Bands shared by more than ``_MD5_MAX_BAND`` docs are dropped — the
+    standard LSH guard against quadratic blowup on degenerate/boilerplate
+    clusters (the synthetic corpus has a tiny vocabulary, so uncapped
+    banding explodes at sf≥0.1).  The cap is part of the operator
+    contract and is replicated exactly in the oracle SQL."""
+    pairs, enr = _lsh_candidate_pairs(spark, sf_dir)
     return track(pairs, enr)
 
 
-def _lsh_candidate_pairs(spark, sf_dir, max_band: int, with_sets: bool = False):
-    """Shared core of the md5-minhash LSH queries: (pairs, persisted
-    per-doc frame).  The persisted frame carries the four signatures —
-    and, when ``with_sets``, the distinct shingle set — so every
-    consumer (band sizes, both self-join sides, a verify stage) reads
-    one materialization of the shingle+md5 pipeline instead of
-    recomputing it.  Both bands come from ONE pass via
-    explode(array(b0, b1)): the former b0 ∪ b1 union recomputed the
-    upstream per branch (measured: bands materialization 3.2 s → 2.2 s
-    at sf1.0)."""
-    sig = minhash_signature(spark, sf_dir, drop_short=True, with_sets=with_sets)
-    enr = sig.persist()
-    bands_col = F.explode(
-        F.array(
-            F.concat_ws("_", F.lit("b0"), "sig0", "sig1"),
-            F.concat_ws("_", F.lit("b1"), "sig2", "sig3"),
-        )
-    )
-    bands = enr.select("doc_id", bands_col.alias("band"))
-    sizes = bands.groupBy("band").agg(F.count(F.lit(1)).alias("n"))
-    ok = bands.join(sizes.filter((F.col("n") > 1) & (F.col("n") <= max_band)), "band")
-    a = ok.select(F.col("doc_id").alias("doc_a"), "band")
-    b = ok.select(F.col("doc_id").alias("doc_b"), "band")
-    pairs = (
-        a.join(b, "band")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    return pairs, enr
+def _lsh_candidate_pairs(spark, sf_dir, with_sets: bool = False):
+    """Shared front of the md5-minhash LSH self-join queries: (pairs
+    (doc_a, doc_b), persisted signature frame).  Shingle-less docs are
+    dropped at the scan (``drop_short``): concat_ws's null-skip would
+    otherwise co-band every short doc.  The persisted frame carries the
+    four signatures — and, when ``with_sets``, the distinct shingle set —
+    so every consumer (band sizes, both self-join sides, a verify stage)
+    reads one materialization of the shingle+md5 pipeline instead of
+    recomputing it; both bands come from ONE pass (explode_bands)."""
+    enr = minhash_signature(spark, sf_dir, drop_short=True, with_sets=with_sets).persist()
+    pairs = band_self_join(_md5_bands(enr), _MD5_MAX_BAND)
+    return pairs.withColumnsRenamed({"key_a": "doc_a", "key_b": "doc_b"}), enr
 
 
 DEDUPE_MINHASH_LSH_SQL = """
@@ -444,26 +445,14 @@ FROM ok a JOIN ok b ON a.band = b.band AND a.doc_id < b.doc_id
 def ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact shingle-set Jaccard verification of the LSH candidate pairs
     (the verify stage of the near-dup pipeline): candidates from
-    :func:`dedupe_minhash_lsh`, shingle sets rebuilt per side, pairs kept
-    at jaccard >= 0.2.  Staged projections per BENCH.md finding #7."""
+    :func:`dedupe_minhash_lsh`, pairs kept at jaccard >= 0.2."""
     # the LSH helper's persisted frame carries the distinct shingle sets
     # (with_sets=True), so the verify stage reads the SAME
     # materialization the banding used instead of rebuilding the shingle
     # pipeline from the corpus (drop_short is output-neutral here:
     # candidates only ever reference banded docs)
-    cand, enr = _lsh_candidate_pairs(spark, sf_dir, 64, with_sets=True)
-    a = enr.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    b = enr.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    j = cand.join(a, "doc_a").join(b, "doc_b")
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b"))).cast("double")
-    union = F.size(F.array_union(F.col("sh_a"), F.col("sh_b"))).cast("double")
-    from hashio_spark.caching import track
-
-    return track(
-        j.select("doc_a", "doc_b", F.round(inter / union, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= 0.2),
-        enr,
-    )
+    cand, enr = _lsh_candidate_pairs(spark, sf_dir, with_sets=True)
+    return track(jaccard_verify(cand, _md5_sets(enr), _md5_sets(enr), 0.2), enr)
 
 
 NGRAM_JACCARD_SQL = f"""
@@ -980,7 +969,7 @@ def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-ranked exactly once (a pair agreeing in k bands used to fold
     # its 64-element dot k times before the old post-rerank distinct)
     bands = base.select(
-        "vec_id",
+        F.col("vec_id").alias("key"),
         F.posexplode(
             banded_sign_vals(
                 F.col("ve"),
@@ -991,18 +980,7 @@ def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("band_id", "band_val"),
     ).persist()
-    sizes = bands.groupBy("band_id", "band_val").agg(F.count(F.lit(1)).alias("n"))
-    ok = bands.join(
-        sizes.filter((F.col("n") > 1) & (F.col("n") <= _NEARDUP_MAX_BUCKET)), ["band_id", "band_val"]
-    )
-    a = ok.select(F.col("vec_id").alias("a_id"), "band_id", "band_val")
-    b = ok.select(F.col("vec_id").alias("b_id"), "band_id", "band_val")
-    cand = (
-        a.join(b, ["band_id", "band_val"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .distinct()
-    )
+    cand = band_self_join(bands, _NEARDUP_MAX_BUCKET).withColumnsRenamed({"key_a": "a_id", "key_b": "b_id"})
     va = base.select(F.col("vec_id").alias("a_id"), F.col("ve").alias("a_ve"), F.col("nrm").alias("a_n"))
     vb = base.select(F.col("vec_id").alias("b_id"), F.col("ve").alias("b_ve"), F.col("nrm").alias("b_n"))
     # exact cosine re-rank via one Arrow einsum per batch (dot_arrow);
@@ -1102,23 +1080,12 @@ def embedding_neardup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     # narrow bands + distinct-before-rerank + Arrow re-rank: same shape
     # and rationale as embedding_neardup above
     bands = base.select(
-        "vec_id",
+        F.col("vec_id").alias("key"),
         F.posexplode(
             banded_sign_vals(F.col("ve"), planes, _SCALED_BANDS, bits, quantize=1000.0)
         ).alias("band_id", "band_val"),
     ).persist()
-    sizes = bands.groupBy("band_id", "band_val").agg(F.count(F.lit(1)).alias("n"))
-    ok = bands.join(
-        sizes.filter((F.col("n") > 1) & (F.col("n") <= _SCALED_MAX_BUCKET)), ["band_id", "band_val"]
-    )
-    a = ok.select(F.col("vec_id").alias("a_id"), "band_id", "band_val")
-    b = ok.select(F.col("vec_id").alias("b_id"), "band_id", "band_val")
-    cand = (
-        a.join(b, ["band_id", "band_val"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .distinct()
-    )
+    cand = band_self_join(bands, _SCALED_MAX_BUCKET).withColumnsRenamed({"key_a": "a_id", "key_b": "b_id"})
     va = base.select(F.col("vec_id").alias("a_id"), F.col("ve").alias("a_ve"), F.col("nrm").alias("a_n"))
     vb = base.select(F.col("vec_id").alias("b_id"), F.col("ve").alias("b_ve"), F.col("nrm").alias("b_n"))
     out = (
@@ -2742,73 +2709,25 @@ def crosscorpus_neardup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``operators/decontaminate.crosscorpus_neardup``): train docs (source
     != 'src0') whose 3-shingle set near-duplicates a benchmark doc
     (source == 'src0'), via the same 4-perm/2-band MinHash LSH as
-    :func:`dedupe_minhash_lsh` — but BIPARTITE: the tiny benchmark band
-    table broadcasts, so the train corpus is never shuffled for the
-    candidate join (the scale story vs the self-join's band shuffle).
-    Candidates then pass exact Jaccard >= 0.2 with the benchmark shingle
-    sets also broadcast.  Production tier: xxhash64 signatures, n_perm=16
-    (`crosscorpus_neardup`)."""
-    from hashio_spark.functions.digests import minhash4_md5_arrow
-
-    d = _t(spark, sf_dir, "documents").filter(
-        F.size(F.split(F.col("text"), " ")) >= 3
-    )
+    :func:`dedupe_minhash_lsh` — but BIPARTITE
+    (``dedupe.band_bipartite_join``): the tiny benchmark band table
+    broadcasts, so the train corpus is never shuffled for the candidate
+    join.  Candidates then pass exact Jaccard >= 0.2 with the benchmark
+    shingle sets also broadcast.  Production tier: xxhash64 signatures,
+    n_perm=16 (`crosscorpus_neardup`)."""
     # ONE persisted frame carries the distinct shingle set AND all four
-    # signatures (the Arrow kernel — see minhash_signature): the former
-    # layout recomputed the JVM shingle+md5 pipeline per consumer — two
-    # band branches × two corpus slices plus two verify sides ≈ 6 full
-    # passes (measured 5.5 s at sf1.0; ~2.6 s shared; ~2.2 s with the
-    # kernel).  Handle tracked on the result for release().
-    enriched = d.select(
-        "doc_id", "source", minhash4_md5_arrow(True)(F.col("text")).alias("_s")
-    ).select(
-        "doc_id",
-        "source",
-        F.col("_s.sh").alias("sh"),
-        *[F.col(f"_s.sig{k}").alias(f"sig{k}") for k in range(4)],
-    ).persist()
-
-    def _bands(df, key_out):
-        # both bands from one pass (same explode form as dedupe_minhash_lsh)
-        return df.select(
-            F.col("doc_id").alias(key_out),
-            F.explode(
-                F.array(
-                    F.concat_ws("_", F.lit("b0"), "sig0", "sig1"),
-                    F.concat_ws("_", F.lit("b1"), "sig2", "sig3"),
-                )
-            ).alias("band"),
-        )
-
-    train_b = _bands(enriched.filter(F.col("source") != "src0"), "doc_id")
-    bench_b = _bands(enriched.filter(F.col("source") == "src0"), "bench_id")
-    # size the train bands AFTER a broadcast semi-join against the bench
-    # bands: bands absent from the benchmark yield no candidates whatever
-    # the cap, so the restriction is output-identical (the oracle counts
-    # over all train bands) while the size agg's input shrinks from the
-    # full banded corpus to the bench-present slice
-    hits = train_b.join(
-        F.broadcast(bench_b.select("band").distinct()), "band", "left_semi"
+    # signatures, so the two corpus slices and both verify sides read one
+    # materialization of the shingle+md5 pipeline (measured 5.5 s → ~2.2
+    # s at sf1.0 against the former per-consumer recompute).
+    enr = _minhash_md5(_t(spark, sf_dir, "documents"), "source", drop_short=True, with_sets=True).persist()
+    train = enr.filter(F.col("source") != "src0")
+    bench = enr.filter(F.col("source") == "src0")
+    cand, hits = band_bipartite_join(_md5_bands(train), _md5_bands(bench), _MD5_MAX_BAND)
+    out = jaccard_verify(
+        cand.withColumnsRenamed({"key_a": "doc_id", "key_b": "bench_id"}),
+        _md5_sets(train), F.broadcast(_md5_sets(bench)), 0.2,
     )
-    sizes = hits.groupBy("band").agg(F.count(F.lit(1)).alias("n"))
-    ok = hits.join(F.broadcast(sizes.filter(F.col("n") <= 64)), "band")
-    cand = ok.join(F.broadcast(bench_b), "band").select("doc_id", "bench_id").distinct()
-
-    tr = enriched.filter(F.col("source") != "src0").select("doc_id", F.col("sh").alias("sh_t"))
-    be = enriched.filter(F.col("source") == "src0").select(
-        F.col("doc_id").alias("bench_id"), F.col("sh").alias("sh_b")
-    )
-    j = cand.join(tr, "doc_id").join(F.broadcast(be), "bench_id")
-    inter = F.size(F.array_intersect(F.col("sh_t"), F.col("sh_b"))).cast("double")
-    union = F.size(F.array_union(F.col("sh_t"), F.col("sh_b"))).cast("double")
-    jac = F.round(inter / union, 6)
-    from hashio_spark.caching import track
-
-    return track(
-        j.select("doc_id", "bench_id", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= 0.2),
-        enriched,
-    )
+    return track(out, enr, hits)
 
 
 CROSSCORPUS_NEARDUP_SQL = """
@@ -3715,22 +3634,16 @@ def ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs where either side is ≥ half-contained.
 
     Same scale shape as :func:`ngram_jaccard`: candidates only (never
-    all-pairs), staged shingle-set projections, one intersect per pair;
-    the intersection is computed once and reused for both directions."""
-    # same shared-materialization shape as ngram_jaccard: the LSH frame
-    # carries the distinct shingle sets for the verify stage
-    cand, enr = _lsh_candidate_pairs(spark, sf_dir, 64, with_sets=True)
-    a = enr.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    b = enr.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    j = cand.join(a, "doc_a").join(b, "doc_b")
+    all-pairs), shingle sets from the shared LSH frame, one intersect per
+    pair reused for both directions."""
+    cand, enr = _lsh_candidate_pairs(spark, sf_dir, with_sets=True)
+    j = pair_sets(cand, _md5_sets(enr), _md5_sets(enr))
     inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b"))).cast("double")
     out = j.select(
         "doc_a", "doc_b",
         F.round(inter / F.size("sh_a").cast("double"), 6).alias("containment_a"),
         F.round(inter / F.size("sh_b").cast("double"), 6).alias("containment_b"),
     )
-    from hashio_spark.caching import track
-
     return track(
         out.filter((F.col("containment_a") >= 0.5) | (F.col("containment_b") >= 0.5)), enr
     )
@@ -4169,44 +4082,3 @@ SELECT query_id, rank, neighbor_id FROM (
 ANN_IVF_TOPK_SQL = _ivf_oracle_sql()
 
 REGISTRY["ann_ivf_topk"] = (ann_ivf_topk, ANN_IVF_TOPK_SQL)
-
-
-# ---------------------------------------------------------------------------
-# Registry ordering
-# ---------------------------------------------------------------------------
-
-# The driver's correctness gate runs REGISTRY in iteration order under a
-# wall-time budget; round 4's file truncated at entry 50, leaving the 35
-# newest queries driver-unattested (VERDICT r4 §Next-round #2).  Queries
-# the driver has ALREADY attested green (CORRECTNESS_r04.json) are the
-# safest to lose to a future truncation, so they run LAST: anything not
-# in this set — the round-4 additions plus any query added later — is
-# moved to the front in its original relative order.
-_DRIVER_ATTESTED_R4 = frozenset({
-    "q1_pricing_summary", "top_revenue_customers", "filter_query",
-    "stats_summary", "digest_md5", "digest_sha256", "composite_digest",
-    "dedupe_exact", "minhash_signature", "dedupe_minhash_lsh",
-    "ngram_jaccard", "verify_manifest", "dedupe_manifests", "snapshot_diff",
-    "drift_psi", "drift_psi_by_group", "drift_ks", "doc_fingerprint",
-    "token_count", "text_quality", "lang_score", "lang_id",
-    "ann_cosine_topk", "embedding_neardup", "embedding_neardup_scaled",
-    "topk_orders_per_customer", "sessionize_events", "pivot_event_counts",
-    "rollup_counts", "dataset_digest", "quality_score", "simhash_md5",
-    "validate_interleaved", "contamination_check", "repetition_stats",
-    "sample_stratified", "q5_region_revenue", "sample_cap_per_group",
-    "dedupe_clusters", "media_features", "media_frames", "media_resize",
-    "corpus_clean_pipeline", "pii_redact", "domain_counts",
-    "numeric_quantiles", "pack_sequences", "events_asof_purchase",
-    "events_in_signup_window", "key_profile_users",
-})
-
-
-def _reorder_registry() -> None:
-    unattested = {k: v for k, v in REGISTRY.items() if k not in _DRIVER_ATTESTED_R4}
-    attested = {k: v for k, v in REGISTRY.items() if k in _DRIVER_ATTESTED_R4}
-    REGISTRY.clear()
-    REGISTRY.update(unattested)
-    REGISTRY.update(attested)
-
-
-_reorder_registry()

@@ -21,21 +21,6 @@ def test_query_runs(spark, name):
     assert len(set(df.columns)) == len(df.columns), "duplicate column names"
 
 
-def test_registry_unattested_queries_run_first():
-    """The driver's correctness gate is wall-time-budgeted and truncates in
-    REGISTRY iteration order (round 4 stopped at entry 50 of 85): queries
-    without a prior driver attestation must come before the already-green
-    ones so a truncation costs re-attestation, never first attestation."""
-    from hashio_spark.queries import _DRIVER_ATTESTED_R4
-
-    order = list(REGISTRY)
-    n_new = len(order) - len(_DRIVER_ATTESTED_R4 & set(order))
-    assert n_new > 0
-    assert not (set(order[:n_new]) & _DRIVER_ATTESTED_R4), (
-        "driver-attested query scheduled before an unattested one"
-    )
-
-
 def test_oracle_sql_parses_in_duckdb():
     con = duckdb.connect()
     for t in TABLES:

@@ -9,7 +9,7 @@ numbers from this directory are NOT citable).
 
 Statistics matched from /root/testdata/sf0.1 (empirically): 31-word
 vocabulary with its unigram distribution, per-doc word-count
-distribution, 20 sources round-robin, lang marginals, and a ~5%%
+distribution, 20 sources round-robin, lang marginals, and a ~5%
 planted near-duplicate rate (mutated copies, 1-3 word edits) that
 reproduces the driver's observed jaccard_pairs_exact density
 (25 pairs/500 docs at sf0.01, 2544/50k at the driver's sf1.0).
@@ -67,7 +67,8 @@ def main() -> None:
         if i > 0 and rng.random() < 0.05:
             base = doc_words[rng.integers(max(0, i - 1000), i)]
             w = base.copy()
-            for _ in range(int(rng.integers(1, 4))):
+            n_edits = int(rng.integers(1, 4)) if len(w) else 0  # empty base: nothing to edit
+            for _ in range(n_edits):
                 w[rng.integers(0, len(w))] = vocab[
                     rng.choice(len(vocab), p=wprob)
                 ]
@@ -110,10 +111,7 @@ def main() -> None:
 
     # --- remaining tables: copied unscaled (NOT citable for timing) ---
     for t in "region nation customer supplier part orders lineitem events".split():
-        src = os.path.join(SRC, f"{t}.parquet")
-        dst = os.path.join(out, f"{t}.parquet")
-        if not os.path.exists(dst):
-            shutil.copyfile(src, dst)
+        shutil.copyfile(os.path.join(SRC, f"{t}.parquet"), os.path.join(out, f"{t}.parquet"))
     print(f"wrote {out}: {n_docs} docs, {n_vecs} vecs")
 
 

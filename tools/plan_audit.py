@@ -199,17 +199,8 @@ def main() -> None:
         notes.append("OK no shingle pipeline in any filter below the Generate (explode_outer shape)")
     sections.append(("contamination_check (finding-#8 guard)", plan_of(q), notes))
 
-    q = REGISTRY["dedupe_minhash_lsh"][0](spark, SF)
-    op = q._jdf.queryExecution().optimizedPlan().toString()
-    notes = []
-    bad = [ln for ln in op.splitlines() if ln.strip().startswith("Filter") or ln.strip().startswith("+- Filter")]
-    bad = [ln for ln in bad if "md5(" in ln]
-    if bad:
-        failures.append("dedupe_minhash_lsh: md5 minhash pipeline duplicated into a filter")
-        notes.append("VIOLATION md5 pipeline inside a Filter: " + bad[0].strip()[:120])
-    else:
-        notes.append("OK no md5 pipeline inside any Filter (token-count scan precondition shape)")
-    sections.append(("dedupe_minhash_lsh (finding-#8 guard)", plan_of(q), notes))
+    # (the MinHash-LSH finding-#8 guards and the crosscorpus_neardup
+    # broadcast shape are tier-1 tests: tests/test_lsh_core.py)
 
     # 9. as-of join: union-timeline plan — exactly ONE hash-partition
     # exchange on the key, no SinglePartition funnel, no BNL/cartesian
@@ -426,22 +417,6 @@ def main() -> None:
                   r"Exchange SinglePartition", r"CartesianProduct"],
     )
     sections.append(("zscore_outliers (decimal-exact group stats, broadcast gate)", p, notes))
-    release(q)
-
-    # 27. cross-corpus decontamination: bipartite LSH — the benchmark
-    # side broadcasts everywhere (bands, size gate, shingle sets), so the
-    # train corpus is never join-shuffled; band sizes are counted on the
-    # bench-present slice only (semi-join BEFORE the agg)
-    q = REGISTRY["crosscorpus_neardup"][0](spark, SF)
-    p = plan_of(q)
-    notes = check(
-        "crosscorpus_neardup", p,
-        must=[r"BroadcastHashJoin", r"HashAggregate"],
-        must_not=[r"BatchEvalPython", r"SortAggregate",
-                  r"Exchange SinglePartition", r"CartesianProduct",
-                  r"SortMergeJoin"],
-    )
-    sections.append(("crosscorpus_neardup (bipartite LSH, benchmark broadcast, semi-join-gated band sizes)", p, notes))
     release(q)
 
     # 28. ingest gate: digest anti-join (broadcast here; co-partitioned
