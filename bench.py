@@ -323,6 +323,7 @@ def _run_validation_batch(cores: int, n_passes: int, max_retries: int = 8,
     ``{"wall": [...], "cpu": [...]}`` — cpu is this JVM's cpu-clock per
     pass, recorded so per-thread cpu inflation (the single-socket memory
     wall, BENCH.md) is data in the artifact, not prose."""
+    from hashio_spark.caching import release
     from hashio_spark.datagen import asset_catalog
     from hashio_spark.plans.validate import validate
 
@@ -336,6 +337,7 @@ def _run_validation_batch(cores: int, n_passes: int, max_retries: int = 8,
             t0 = time.monotonic()
             res = validate(df, cat, algo=algo or ALGO, persist_violations=False)
             res.report.collect()
+            release(res.report)
             return time.monotonic() - t0, _jvm_cpu_seconds() - c0
 
         if os.path.exists(_WARMUP_PATH + "/_SUCCESS"):

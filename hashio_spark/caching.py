@@ -19,6 +19,17 @@ after their consuming action::
     pairs.write.parquet(out)
     release(pairs)            # unpersists the internal banding
 
+``plans.validate.validate`` follows the same contract: it persists its
+per-doc frame (the one read of the corpus) and tracks it on both the
+report and the violations it returns::
+
+    res = validate(docs, catalog)
+    res.violations.write.parquet(out)
+    rows = res.report.collect()
+    release(res.report)       # unpersists the per-doc frame
+
+A handle may itself carry handles (a query that returns a projection of
+``res.report`` tracks ``res.report``); ``release`` follows them.
 ``release`` is a no-op on DataFrames without handles, so callers may apply
 it unconditionally.  ``spark.catalog.clearCache()`` remains the blunt
 fallback (bench.py uses it between unrelated queries).
@@ -43,4 +54,5 @@ def release(df: DataFrame) -> None:
     ``df`` (no-op if there are none).  Call after the consuming action."""
     for h in getattr(df, _ATTR, ()):
         h.unpersist()
+        release(h)
     setattr(df, _ATTR, ())

@@ -30,6 +30,7 @@ def _spark(args) -> SparkSession:
 
 
 def cmd_validate(args) -> int:
+    from hashio_spark.caching import release
     from hashio_spark.plans.validate import manifest_rows, validate
     from hashio_spark.sources.manifest_store import ManifestStore
 
@@ -61,8 +62,8 @@ def cmd_validate(args) -> int:
         # executors to the pass: a wrong-shaped table fails here in
         # milliseconds with verdict rows and exit 1, not with a raw
         # AnalysisException an hour into a 100-TB job.  Metadata-only
-        # (check_schema reads df.schema, never scans).
-        from hashio_spark.operators.expectations import SchemaField, check_schema
+        # (schema_verdicts reads df.schema in Python: no Spark job).
+        from hashio_spark.operators.expectations import SchemaField, schema_verdicts
 
         contract = [
             SchemaField("doc_id", "string"),
@@ -71,12 +72,12 @@ def cmd_validate(args) -> int:
                 "array<struct<kind:string,text:string,media_ref:string,offset:int>>",
             ),
         ]
-        bad = [r for r in check_schema(docs, contract).collect() if r.status != "ok"]
+        bad = [v for v in schema_verdicts(docs, contract) if v[3] != "ok"]
         if bad:
-            for r in bad:
-                print(json.dumps({"check": "schema", "column": r.column,
-                                  "expected": r.expected, "actual": r.actual,
-                                  "status": r.status}))
+            for column, expected, actual, status in bad:
+                print(json.dumps({"check": "schema", "column": column,
+                                  "expected": expected, "actual": actual,
+                                  "status": status}))
             print(json.dumps({"status": "schema-contract-failed", "n_bad": len(bad)}))
             return 1
         if "partition_id" not in docs.columns:
@@ -110,21 +111,33 @@ def cmd_validate(args) -> int:
         print(f"error: unknown --checks name(s): {sorted(unknown)}; "
               f"valid: {sorted(valid_checks)}", file=sys.stderr)
         return 2
+    # one read of the corpus: validate() persists its per-doc frame; the
+    # violations (persisted only when written) and the report derive from
+    # it, and the report is materialized ONCE — merge, export and the
+    # summary line all read that copy
     res = validate(docs, catalog, algo=algo, parity=args.parity, checks=checks,
-                   extra_algos=extra_algos, with_sketches=args.sketches)
-    if store is not None:
-        store.merge(manifest_rows(res, args.run_id, algo, lineage=",".join(inputs),
-                                  extra_algos=extra_algos))
-    if args.violations_out:
-        res.violations.write.mode("overwrite").parquet(args.violations_out)
-    if args.export:
-        from hashio_spark.sources.exporters import EXPORTERS
+                   extra_algos=extra_algos, with_sketches=args.sketches,
+                   persist_violations=bool(args.violations_out))
+    report = res.report.persist()
+    try:
+        if args.violations_out:
+            res.violations.write.mode("overwrite").parquet(args.violations_out)
+        rows = report.collect()
+        if store is not None:
+            store.merge(manifest_rows(res, args.run_id, algo, lineage=",".join(inputs),
+                                      extra_algos=extra_algos))
+        if args.export:
+            from hashio_spark.sources.exporters import EXPORTERS
 
-        EXPORTERS.write(res.report, args.export, "partition_id", algo)
-    summary = res.report.agg(
-        F.sum("row_count").alias("docs"), F.sum("violation_count").alias("violations")
-    ).first()
-    line = {"run_id": args.run_id, "docs": summary["docs"], "violations": summary["violations"]}
+            EXPORTERS.write(report, args.export, "partition_id", algo)
+    finally:
+        report.unpersist()
+        res.violations.unpersist()
+        release(report)
+    # an empty report sums to null, as SQL's sum() does
+    line = {"run_id": args.run_id,
+            "docs": sum(r["row_count"] for r in rows) if rows else None,
+            "violations": sum(r["violation_count"] for r in rows) if rows else None}
     if quarantined:
         line["quarantined"] = quarantined
     print(json.dumps(line))
@@ -434,7 +447,7 @@ def cmd_expect(args) -> int:
     reported, and fail the gate; metric rules run on the good split.
     """
     from hashio_spark.operators.expectations import (
-        Expectation, SchemaField, check_schema, evaluate_expectations,
+        Expectation, SchemaField, schema_verdicts, evaluate_expectations,
     )
 
     with open(args.rules) as f:
@@ -474,12 +487,13 @@ def cmd_expect(args) -> int:
         # parquet tier: the schema contract is checked against the
         # physical file schema (jsonl already ENFORCED it at the scan —
         # re-checking there would only flag Spark's forced-nullable read)
-        for r in check_schema(df, [SchemaField(s["name"], s["dtype"], s.get("nullable", True))
-                                   for s in spec.get("schema", [])],
-                              strict=spec.get("strict_schema", False)).collect():
-            print(json.dumps({"check": "schema", "column": r.column, "expected": r.expected,
-                              "actual": r.actual, "status": r.status}))
-            failed += r.status not in ("ok",)
+        for column, expected, actual, status in schema_verdicts(
+                df, [SchemaField(s["name"], s["dtype"], s.get("nullable", True))
+                     for s in spec.get("schema", [])],
+                strict=spec.get("strict_schema", False)):
+            print(json.dumps({"check": "schema", "column": column, "expected": expected,
+                              "actual": actual, "status": status}))
+            failed += status != "ok"
         if failed:
             # schema violations make metric bounds meaningless — stop before the scan
             print(json.dumps({"schema_failed": failed, "rules_run": False}))

@@ -21,7 +21,7 @@ Scale notes per rule:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 VIOLATION_COLS = ("doc_id", "partition_id", "rule", "detail")
@@ -39,10 +39,15 @@ def _violations(df: DataFrame, rule: str, detail: F.Column) -> DataFrame:
 def duplicate_keys(df: DataFrame, key: str = "doc_id") -> DataFrame:
     """Uniqueness check: groups with >1 row (reference dedupe-by-content
     analog, ``/root/reference/lib/hashio/encoder.py:463-500`` — groupBy +
-    filter(count>1) replaces the in-memory hash_map bucketing)."""
+    filter(count>1) replaces the in-memory hash_map bucketing).
+
+    A key repeated across partitions is charged to the SMALLEST
+    partition_id holding it (``first`` would depend on shuffle order, so
+    the stored violation_count/passed of a partition could flip between
+    runs)."""
     dups = (
         df.groupBy(key)
-        .agg(F.count(F.lit(1)).alias("dup_count"), F.first("partition_id").alias("partition_id"))
+        .agg(F.count(F.lit(1)).alias("dup_count"), F.min("partition_id").alias("partition_id"))
         .filter(F.col("dup_count") > 1)
     )
     return dups.select(
@@ -51,6 +56,18 @@ def duplicate_keys(df: DataFrame, key: str = "doc_id") -> DataFrame:
         F.lit("duplicate_doc_id").alias("rule"),
         F.concat(F.lit("count="), F.col("dup_count").cast("string")).alias("detail"),
     )
+
+
+def distinct_media_refs(spans: str = "spans") -> Column:
+    """A doc's distinct non-null media_refs, as one array per row."""
+    # `spans.media_ref` via getField (GetArrayStructFields), NOT
+    # `transform(spans, s -> s.media_ref)`: NestedColumnAliasing prunes
+    # ExtractValue expressions but gives up on lambda-variable field
+    # access inside higher-order functions, so the transform form makes
+    # the parquet scan read the FULL span struct — every text payload —
+    # just to drop it.  With getField the scan's ReadSchema is
+    # spans:array<struct<media_ref:string>>.
+    return F.array_distinct(F.filter(F.col(spans).getField("media_ref"), lambda r: r.isNotNull()))
 
 
 def dangling_refs(
@@ -63,30 +80,21 @@ def dangling_refs(
     Distinct refs are extracted per doc with array functions (no explode
     of text spans), then anti-joined against the catalog.
     """
-    # `spans.media_ref` via getField (GetArrayStructFields), NOT
-    # `transform(spans, s -> s.media_ref)`: NestedColumnAliasing prunes
-    # ExtractValue expressions but gives up on lambda-variable field
-    # access inside higher-order functions, so the transform form makes
-    # the parquet scan read the FULL span struct — every text payload —
-    # just to drop it (measured: a second full-width spans decode in the
-    # report plan).  With getField the scan's ReadSchema is
-    # spans:array<struct<media_ref:string>>.
-    refs = docs.select(
-        "doc_id",
-        "partition_id",
-        F.explode(
-            F.array_distinct(
-                F.filter(
-                    F.col("spans").getField("media_ref"),
-                    lambda r: r.isNotNull(),
-                )
-            )
-        ).alias("media_ref"),
-    )
+    refs = docs.select("doc_id", "partition_id", distinct_media_refs().alias("media_refs"))
+    return dangling_from_refs(refs, catalog, broadcast_catalog)
+
+
+def dangling_from_refs(
+    refs: DataFrame, catalog: DataFrame, broadcast_catalog: bool = True
+) -> DataFrame:
+    """:func:`dangling_refs` over a frame that already carries each doc's
+    ``media_refs`` array (doc_id, partition_id, media_refs) — the form
+    ``plans.validate`` uses on its persisted per-doc frame."""
+    exploded = refs.select("doc_id", "partition_id", F.explode("media_refs").alias("media_ref"))
     cat = catalog.select("media_ref").distinct()
     if broadcast_catalog:
         cat = F.broadcast(cat)
-    dangling = refs.join(cat, "media_ref", "left_anti")
+    dangling = exploded.join(cat, "media_ref", "left_anti")
     return dangling.select(
         "doc_id",
         "partition_id",

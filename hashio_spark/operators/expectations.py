@@ -146,16 +146,19 @@ class SchemaField:
     nullable: bool = True
 
 
-def check_schema(df: DataFrame, contract: list[SchemaField], strict: bool = False) -> DataFrame:
+def schema_verdicts(
+    df: DataFrame, contract: list[SchemaField], strict: bool = False
+) -> list[tuple[str, str | None, str | None, str]]:
     """Validate ``df``'s PHYSICAL schema against a declared contract —
     the "schema" half of the schema + constraint validator.  Pure
-    metadata: reads ``df.schema`` only, triggers NO scan, so it is the
-    cheap pre-flight gate a pipeline runs before committing executors to
-    a 100-TB pass (a wrong-typed column fails here in milliseconds, not
-    an hour into the job).
+    metadata: reads ``df.schema`` only and returns plain Python tuples —
+    no scan, no Spark job — so it is the cheap pre-flight gate a pipeline
+    runs before committing executors to a 100-TB pass (a wrong-typed
+    column fails here in milliseconds, not an hour into the job).
 
-    One verdict row per contract field — status ``ok`` / ``missing`` /
-    ``type_mismatch`` / ``nullability`` — plus, when ``strict``, one
+    One ``(column, expected, actual, status)`` verdict per contract
+    field — status ``ok`` / ``missing`` / ``type_mismatch`` /
+    ``nullability`` — plus, when ``strict``, one
     ``unexpected`` row per physical column the contract does not name.
     Struct/array types compare STRUCTURALLY: struct fields match by NAME
     (order-insensitive — downstream consumers access fields by name, so
@@ -208,8 +211,15 @@ def check_schema(df: DataFrame, contract: list[SchemaField], strict: bool = Fals
         for f in df.schema.fields:
             if f.name not in named:
                 rows.append((f.name, None, f.dataType.simpleString(), "unexpected"))
+    return rows
+
+
+def check_schema(df: DataFrame, contract: list[SchemaField], strict: bool = False) -> DataFrame:
+    """:func:`schema_verdicts` as a DataFrame
+    ``(column, expected, actual, status)``."""
     return df.sparkSession.createDataFrame(
-        rows, "column string, expected string, actual string, status string"
+        schema_verdicts(df, contract, strict),
+        "column string, expected string, actual string, status string",
     )
 
 

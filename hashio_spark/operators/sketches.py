@@ -213,7 +213,7 @@ def bloom_agg_expr(lanes_col: str = "_bl", n_lanes: int = _BLOOM_LANES) -> F.Col
     """bit_or-fold a per-row ``array<long>`` lane column (from
     :func:`bloom_lanes_arrow`) straight into the serialized hex form —
     one aggregate expression, so the fingerprint can ride any existing
-    groupBy (validate's side scan)."""
+    groupBy (validate's report aggregation)."""
     return F.concat_ws(
         ",",
         *[

@@ -16,41 +16,23 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def stat_aggs(
-    columns: list[str],
-    hll_rsd: float = 0.05,
-    skip_minmax: frozenset[str] = frozenset(),
-) -> list[Column]:
+def stat_aggs(columns: list[str], hll_rsd: float = 0.05) -> list[Column]:
     """count/null-count/min/max/approx-distinct aggregate expressions.
 
-    ``skip_minmax`` names columns whose min/max should be EXCLUDED here and
-    computed elsewhere (see :func:`minmax_aggs`).  Rationale: ``min``/``max``
-    over a non-primitive buffer type (StringType etc.) is a declarative
-    aggregate with an immutable buffer field, which disqualifies the whole
-    aggregation from ``HashAggregateExec`` — Spark silently degrades to
-    ``SortAggregate``, i.e. a per-task sort of the *input* rows.  When the
-    aggregation runs over a wide projection (the flagship's enriched table
-    carries the full ``spans`` payload) that sort moves every byte of every
-    row, for two string stats.  Splitting string min/max into a
-    column-pruned side aggregation keeps the wide aggregation a
-    HashAggregate with map-side partials.
+    ``min``/``max`` over a string column has an immutable buffer field,
+    which makes the whole aggregation a ``SortAggregate`` (a per-task sort
+    of the INPUT rows) — cheap over a narrow projection like the
+    flagship's per-doc frame, expensive over one that carries a wide
+    payload column.
     """
     aggs: list[Column] = [F.count(F.lit(1)).alias("row_count")]
     for c in columns:
-        aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"{c}_nulls"))
-        if c not in skip_minmax:
-            aggs += [F.min(c).alias(f"{c}_min"), F.max(c).alias(f"{c}_max")]
-        aggs.append(F.approx_count_distinct(c, hll_rsd).alias(f"{c}_approx_distinct"))
-    return aggs
-
-
-def minmax_aggs(columns: list[str]) -> list[Column]:
-    """min/max aggregate expressions for columns deferred via
-    ``skip_minmax`` — run these over a pruned (group_col, *columns)
-    projection where the inevitable SortAggregate sorts narrow rows."""
-    aggs: list[Column] = []
-    for c in columns:
-        aggs += [F.min(c).alias(f"{c}_min"), F.max(c).alias(f"{c}_max")]
+        aggs += [
+            F.sum(F.col(c).isNull().cast("long")).alias(f"{c}_nulls"),
+            F.min(c).alias(f"{c}_min"),
+            F.max(c).alias(f"{c}_max"),
+            F.approx_count_distinct(c, hll_rsd).alias(f"{c}_approx_distinct"),
+        ]
     return aggs
 
 

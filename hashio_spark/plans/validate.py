@@ -3,19 +3,27 @@ interleaved-document table → (partition_report, violations).
 
 Spark analog of ``hashio <PATH> -o hash.json`` + ``--verify``
 (``/root/reference/lib/hashio/worker.py:204-294`` per-file pipeline +
-``encoder.py:651-705`` verify): a single logical DataFrame program that
-Catalyst compiles into
+``encoder.py:651-705`` verify).  Like the reference, which derives a
+file's digest and metadata in the one read of that file, the pass reads
+the table's ``spans`` exactly once, into a narrow persisted per-doc
+frame, and every output is derived from that frame:
 
-  scan → per-row digest/flag expressions (whole-stage codegen)
-       → ONE shuffle on partition_id for the report aggregation
-       → side outputs: uniqueness shuffle on doc_id, broadcast anti-join
-         for referential violations.
+  scan → per-doc frame (persisted): doc_id, partition_id[, quality],
+         doc_digest[_<algo>], n_spans, text/media span counts, the two
+         span-shape flag counts, the doc's distinct media_refs
+       ├→ report: ONE groupBy(partition_id) aggregation — column stats,
+       │  group digests, span sums, quality histogram, sketches
+       ├→ violations: shape rows from the flag counts, a uniqueness
+       │  shuffle on doc_id, a broadcast anti-join of media_refs
+       └→ report.violation_count = per-partition count of the violations
 
 Scale properties:
 * per-doc work is pure column expressions (no Python in the hot path;
   parity digests via Arrow pandas UDFs only when requested);
-* the report aggregation is algebraic → map-side partials, network
-  O(n_partitions);
+* the persisted frame holds a few scalars and a short ref array per doc,
+  so the report, the violation branches and every downstream sink
+  (manifest merge, violations write, export) re-read it instead of the
+  spans payload;
 * the default group digest is the commutative sum-mod-2^64 fold
   (:func:`hashio_spark.functions.canonical.agg_digest_xor`) — no
   collect_list, no skew from oversized span arrays; ``parity=True``
@@ -32,20 +40,21 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hashio_spark.caching import track
 from hashio_spark.functions.canonical import (
     agg_digest_xor,
-    canonical_span_expr,
     composite_digest_expr,
     doc_digest_expr,
 )
-from hashio_spark.operators.stats import minmax_aggs, stat_aggs
+from hashio_spark.operators.stats import stat_aggs
+
+_NO_VIOLATIONS = "array<struct<rule:string,detail:string>>"
 
 
 @dataclass
 class ValidationResult:
     report: DataFrame      # one row per partition_id: stats + digest + pass/fail
     violations: DataFrame  # (doc_id, partition_id, rule, detail)
-    documents: DataFrame   # input + doc_digest column (for manifest/verify reuse)
 
 
 def validate(
@@ -59,7 +68,6 @@ def validate(
     checks: frozenset[str] = frozenset({"shape", "uniqueness", "referential"}),
     extra_algos: tuple[str, ...] = (),
     with_sketches: bool = False,
-    side_stats: bool = True,
 ) -> ValidationResult:
     """Run the full stats + constraint + digest pass.
 
@@ -67,11 +75,17 @@ def validate(
     ``parity=True`` uses reference-byte-identical digests (pandas UDF) and
     the sorted composite group digest; default keeps everything JVM-side.
 
+    The one read of ``docs`` lands in the persisted **per-doc frame**
+    (see the module docstring).  Its handle is attached to both returned
+    DataFrames with :func:`hashio_spark.caching.track`; call
+    :func:`hashio_spark.caching.release` on either after the last
+    consuming action.
+
     ``extra_algos`` computes additional digest tiers IN THE SAME SCAN —
     the reference's manifest entries carry one digest per known algo
     (``/root/reference/lib/hashio/exporter.py:354-362`` probes them all);
-    here each extra algo adds a ``doc_digest_<algo>`` column to the same
-    enriched projection (the canonical span serialization is shared via
+    here each extra algo adds a ``doc_digest_<algo>`` column to the
+    per-doc frame (the canonical span serialization is shared via
     codegen subexpression elimination, the table is still decoded once)
     and a ``digest_<algo>`` group digest to the same report aggregation.
     :func:`manifest_rows` fans the report out into one manifest row per
@@ -83,26 +97,17 @@ def validate(
     later answered by unioning manifest sketches instead of rescanning
     the corpus.
 
-    ``side_stats=False`` skips the column-pruned side aggregation (string
-    min/max, quality histogram, sketches) and its report join entirely.
-    The side outputs are report-only ride-alongs — a caller that consumes
-    just (row_count, digest, violation_count, passed) pays one full extra
-    stage chain (narrow scan → exchange → agg → join) for columns it
-    drops, and Catalyst cannot eliminate the join on its own.  The
-    production default stays True (the manifest baseline needs the
-    histogram); the oracle-parity flagship catalog query opts out.
+    The report aggregation carries every stat (string min/max and the
+    quality histogram included).  A caller that projects only some report
+    columns pays only for those: Catalyst prunes unreferenced aggregates.
 
-    ``persist_violations`` caches the violation rows: they feed two
-    consumers (the report's per-partition violation_count join and the
-    caller's violation sink) and are tiny relative to the input, so
-    persisting them avoids a second full scan of the document table even
-    at 10^12-row scale.  Callers should ``unpersist()`` when done.
+    ``persist_violations`` caches the violation rows: they feed both the
+    report's per-partition violation_count and the caller's violation
+    sink, so a caller that writes them after (or before) reading the
+    report computes them once.  A caller that never reads the violations
+    passes False.  Callers ``unpersist()`` the violations when done.
     """
-    # ---- single full-width pass -------------------------------------
-    # digest + stats + span-shape violation FLAGS are computed in one
-    # projection so the table is decoded exactly once; uniqueness and
-    # referential checks run on column-pruned scans (doc_id-only /
-    # media_ref-only) plus their own small shuffles.
+    # ---- the single read: a narrow per-doc frame ----------------------
     # shape flags fold over PRIMITIVE projections of the spans array —
     # slicing/zipping the struct array itself copies every span's full
     # text payload per row (measured ~1.8× the whole pass cost at 16M
@@ -137,15 +142,28 @@ def validate(
         ),
     ).otherwise(F.lit(0))
 
-    do_shape = "shape" in checks
-    enriched = (
-        docs.withColumn("doc_digest", doc_digest_expr("spans", algo, parity=parity))
-        .withColumn("n_spans", F.size("spans"))
-        .withColumn("_n_null_text", n_bad_null if do_shape else F.lit(0))
-        .withColumn("_n_ooo", n_bad_ooo if do_shape else F.lit(0))
+    from hashio_spark.operators.constraints import (
+        dangling_from_refs,
+        distinct_media_refs,
+        duplicate_keys,
     )
-    for a in extra_algos:
-        enriched = enriched.withColumn(f"doc_digest_{a}", doc_digest_expr("spans", a, parity=parity))
+
+    do_shape = "shape" in checks
+    do_refs = "referential" in checks and catalog is not None
+    has_quality = "quality" in docs.columns
+    per_doc = docs.select(
+        "doc_id",
+        "partition_id",
+        *(["quality"] if has_quality else []),
+        doc_digest_expr("spans", algo, parity=parity).alias("doc_digest"),
+        *[doc_digest_expr("spans", a, parity=parity).alias(f"doc_digest_{a}") for a in extra_algos],
+        F.size("spans").alias("n_spans"),
+        F.size(F.filter(kinds, lambda k: k == "text")).alias("_text_spans"),
+        F.size(F.filter(kinds, lambda k: k != "text")).alias("_media_spans"),
+        (n_bad_null if do_shape else F.lit(0)).alias("_n_null_text"),
+        (n_bad_ooo if do_shape else F.lit(0)).alias("_n_ooo"),
+        *([distinct_media_refs().alias("media_refs")] if do_refs else []),
+    ).persist()
 
     # group digest tier: "composite" = reference-parity sorted fold
     # (collect_list per group — exact but memory O(group)); "fold" = the
@@ -162,49 +180,27 @@ def validate(
             else agg_digest_xor("doc_id", doc_col)
         )
 
-    group_digest_expr = _group_digest("doc_digest", algo)
-
-    stat_cols = ["doc_id", "n_spans"] + (["quality"] if "quality" in docs.columns else [])
-    # String-typed stat columns would drag the wide aggregation (which
-    # carries the spans payload) down to SortAggregate — their min/max is
-    # deferred to the column-pruned side aggregation below (r03 VERDICT
-    # "What's wrong #1"); everything left here is hash-aggregable, so the
-    # main agg is a HashAggregate partial/final pair with map-side combine.
-    from pyspark.sql.types import StringType
-
-    str_stat_cols = [
-        c for c in stat_cols
-        if c in docs.columns and isinstance(docs.schema[c].dataType, StringType)
-    ]
+    # ---- report: ONE aggregation over the per-doc frame ---------------
+    # The string min/max make it a SortAggregate; it sorts the narrow
+    # per-doc rows, never the spans payload.  The quality histogram is
+    # stored per partition as the baseline for cross-run PSI
+    # (operators.drift.manifest_drift).
+    stat_cols = ["doc_id", "n_spans"] + (["quality"] if has_quality else [])
+    pre = per_doc
     aggs = [
-        *stat_aggs(stat_cols, skip_minmax=frozenset(str_stat_cols)),
-        group_digest_expr.alias("digest"),
+        *stat_aggs(stat_cols),
+        _group_digest("doc_digest", algo).alias("digest"),
         *[_group_digest(f"doc_digest_{a}", a).alias(f"digest_{a}") for a in extra_algos],
-        F.sum(F.size(F.filter(kinds, lambda k: k == "text"))).alias("text_spans"),
-        F.sum(F.size(F.filter(kinds, lambda k: k != "text"))).alias("media_spans"),
+        F.sum("_text_spans").alias("text_spans"),
+        F.sum("_media_spans").alias("media_spans"),
         F.sum((F.col("_n_null_text") > 0).cast("long")).alias("null_text_violations"),
         F.sum((F.col("_n_ooo") > 0).cast("long")).alias("offset_violations"),
     ]
-    report = enriched.groupBy("partition_id").agg(*aggs)
-
-    # ---- column-pruned side aggregation ------------------------------
-    # ONE narrow scan carries both (a) the deferred string min/max (its
-    # SortAggregate now sorts (partition_id, doc_id) rows, not full-width
-    # rows with the spans payload) and (b) the per-partition quality
-    # histogram serialized for manifest_rows — the stored baseline for
-    # cross-run PSI (operators.drift.manifest_drift).  The histogram's 20
-    # bucket terms stay out of the wide aggregate on purpose: inlining
-    # them pushed the codegen'd update function past JIT limits and
-    # slowed the WHOLE pass ~40% (measured at 12M docs); the pruned side
-    # pass costs ~2 s at that scale.
-    has_quality = side_stats and "quality" in docs.columns
-    side_aggs = minmax_aggs(str_stat_cols) if side_stats else []
-    side_sel = [F.col("partition_id"), *[F.col(c) for c in str_stat_cols]]
     if has_quality:
         from hashio_spark.operators.drift import bucket_expr
 
-        side_sel.append(bucket_expr("quality", 0.0, 1.0, 20).alias("_qb"))
-        side_aggs.append(
+        pre = pre.withColumn("_qb", bucket_expr("quality", 0.0, 1.0, 20))
+        aggs.append(
             F.concat_ws(
                 ",", *[F.sum((F.col("_qb") == i).cast("long")).cast("string") for i in range(20)]
             ).alias("quality_hist")
@@ -218,108 +214,56 @@ def validate(
             hll_sketch_expr,
         )
 
-        # rides the same narrow side scan: sketch update is cheap per row
-        # and the serialized sketch (KBs) only crosses the wire once per
-        # map-side partial — never the wide aggregation's codegen budget
-        side_sel.append(F.col("doc_id").alias("_sk_id"))
-        side_aggs.append(hll_sketch_expr("_sk_id").alias(SKETCH_KEY))
-        # doc_id bloom fingerprint rides the same scan: 16 bit_or longs
-        # per partition, so later point lookups ("was doc X validated?")
-        # prune from manifest rows alone (sketches.manifest_probe).
-        # Lanes come from the Arrow kernel (lock-free hashlib md5 —
-        # BENCH.md finding #1), staged as one array column.
-        side_sel.append(bloom_lanes_arrow(F.col("doc_id").cast("string")).alias("_bl"))
-        side_aggs.append(bloom_agg_expr("_bl").alias(BLOOM_KEY))
-    if side_aggs:
-        side = docs.select(*side_sel).groupBy("partition_id").agg(*side_aggs)
-        report = report.join(side, "partition_id", "left_outer")
+        aggs.append(hll_sketch_expr("doc_id").alias(SKETCH_KEY))
+        # doc_id bloom fingerprint: 16 bit_or longs per partition, so
+        # later point lookups ("was doc X validated?") prune from manifest
+        # rows alone (sketches.manifest_probe).  Lanes come from the Arrow
+        # kernel (lock-free hashlib md5 — BENCH.md finding #1).
+        pre = pre.withColumn("_bl", bloom_lanes_arrow(F.col("doc_id").cast("string")))
+        aggs.append(bloom_agg_expr("_bl").alias(BLOOM_KEY))
+    report = pre.groupBy("partition_id").agg(*aggs)
 
-    # restore the canonical column order (per-column stats interleaved,
-    # as stat_aggs emitted before the min/max split)
-    ordered = ["partition_id", "row_count"]
-    for c in stat_cols:
-        ordered += [f"{c}_nulls", f"{c}_min", f"{c}_max", f"{c}_approx_distinct"]
-    ordered += ["digest", *[f"digest_{a}" for a in extra_algos],
-                "text_spans", "media_spans", "null_text_violations", "offset_violations"]
-    if has_quality:
-        ordered.append("quality_hist")
-    ordered += [c for c in report.columns if c not in ordered]  # never drop
-    report = report.select(*[c for c in ordered if c in report.columns])
-
-    # violation ROWS: span-shape rules reuse the flag columns; uniqueness /
-    # referential bring their per-partition counts for the report
-    shape_viol = enriched.filter((F.col("_n_null_text") > 0) | (F.col("_n_ooo") > 0)).select(
-        "doc_id",
-        "partition_id",
-        F.explode(
-            F.concat(
-                F.when(F.col("_n_null_text") > 0,
-                       F.array(F.struct(F.lit("null_text_span").alias("rule"),
-                                        F.concat(F.lit("n_bad_spans="), F.col("_n_null_text").cast("string")).alias("detail")))
-                       ).otherwise(F.array().cast("array<struct<rule:string,detail:string>>")),
-                F.when(F.col("_n_ooo") > 0,
-                       F.array(F.struct(F.lit("offset_out_of_order").alias("rule"),
-                                        F.concat(F.lit("n_bad_pairs="), F.col("_n_ooo").cast("string")).alias("detail")))
-                       ).otherwise(F.array().cast("array<struct<rule:string,detail:string>>")),
-            )
-        ).alias("v"),
-    ).select("doc_id", "partition_id", F.col("v.rule").alias("rule"), F.col("v.detail").alias("detail"))
-
-    from hashio_spark.operators.constraints import dangling_refs, duplicate_keys
+    # ---- violation rows ------------------------------------------------
+    def _rule(n: str, rule: str, label: str):
+        return F.when(
+            F.col(n) > 0,
+            F.array(F.struct(F.lit(rule).alias("rule"),
+                             F.concat(F.lit(label), F.col(n).cast("string")).alias("detail"))),
+        ).otherwise(F.array().cast(_NO_VIOLATIONS))
 
     parts = []
-    other_parts = []  # non-shape branches: feed the report's count join
     if do_shape:
-        parts.append(shape_viol)
+        parts.append(
+            per_doc.filter((F.col("_n_null_text") > 0) | (F.col("_n_ooo") > 0))
+            .select("doc_id", "partition_id",
+                    F.explode(F.concat(_rule("_n_null_text", "null_text_span", "n_bad_spans="),
+                                       _rule("_n_ooo", "offset_out_of_order", "n_bad_pairs=")))
+                    .alias("v"))
+            .select("doc_id", "partition_id", "v.rule", "v.detail")
+        )
     if "uniqueness" in checks:
-        dup = duplicate_keys(docs)
-        parts.append(dup)
-        other_parts.append(dup)
-    if "referential" in checks and catalog is not None:
-        dang = dangling_refs(docs, catalog, broadcast_catalog)
-        parts.append(dang)
-        other_parts.append(dang)
+        parts.append(duplicate_keys(per_doc))
+    if do_refs:
+        parts.append(dangling_from_refs(per_doc, catalog, broadcast_catalog))
     if not parts:
-        parts = [shape_viol.filter(F.lit(False))]
+        parts = [per_doc.select("doc_id", "partition_id", F.lit("").alias("rule"),
+                                F.lit("").alias("detail")).filter(F.lit(False))]
     violations = parts[0]
     for p in parts[1:]:
         violations = violations.unionByName(p)
     if persist_violations:
         violations = violations.persist()
 
-    # uniqueness + referential counts arrive via one tiny aggregation —
-    # n_partitions rows, not a rescan.  Aggregate the NON-SHAPE branches
-    # directly (rule sets are disjoint, so this is output-identical to
-    # filtering the union): routing through `violations` would drag the
-    # shape branch — a full spans decode plus the interpreted flag
-    # pipelines — into the report plan a second time, because the
-    # rule-isin filter cannot be constant-folded through the shape
-    # branch's explode (measured: one extra full-struct scan per pass).
-    # When the union IS persisted, the caller's first violations action
-    # still materializes every branch exactly once.
-    if other_parts:
-        others = other_parts[0]
-        for p in other_parts[1:]:
-            others = others.unionByName(p)
-        other_counts = others.groupBy("partition_id").agg(
-            F.count(F.lit(1)).alias("_other_violations")
-        )
-    else:
-        other_counts = violations.filter(F.lit(False)).groupBy("partition_id").agg(
-            F.count(F.lit(1)).alias("_other_violations")
-        )
+    # violation_count: n_partitions rows counted from the violations
+    # themselves (persisted → no recompute of any branch)
+    counts = violations.groupBy("partition_id").agg(F.count(F.lit(1)).alias("_n_viol"))
     report = (
-        report.join(other_counts, "partition_id", "left_outer")
-        .withColumn(
-            "violation_count",
-            F.col("null_text_violations") + F.col("offset_violations") + F.coalesce(F.col("_other_violations"), F.lit(0)),
-        )
-        .drop("_other_violations")
+        report.join(counts, "partition_id", "left_outer")
+        .withColumn("violation_count", F.coalesce(F.col("_n_viol"), F.lit(0).cast("long")))
+        .drop("_n_viol")
         .withColumn("passed", F.col("violation_count") == 0)
     )
-    return ValidationResult(
-        report=report, violations=violations, documents=enriched.drop("_n_null_text", "_n_ooo")
-    )
+    return ValidationResult(report=track(report, per_doc), violations=track(violations, per_doc))
 
 
 def manifest_rows(

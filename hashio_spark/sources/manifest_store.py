@@ -123,13 +123,18 @@ class ManifestStore:
     def _use_iceberg(self) -> bool:
         return self.table is not None and _iceberg_available(self.spark)
 
+    def _empty(self) -> DataFrame:
+        # from a zero-partition RDD: a local-list createDataFrame would
+        # parallelize an empty list and start Python tasks per read
+        return self.spark.createDataFrame(self.spark.sparkContext.emptyRDD(), MANIFEST_SCHEMA)
+
     def read(self) -> DataFrame:
         if self._use_iceberg():
             return self.spark.table(self.table)
         fs, jvm = self._fs()
         base = jvm.org.apache.hadoop.fs.Path(self.path)
         if not fs.exists(base):
-            return self.spark.createDataFrame([], MANIFEST_SCHEMA)
+            return self._empty()
         if not self._run_partition_names(fs, jvm, self.path):
             # dir exists but has no run_id=* partitions: either a fresh
             # empty store (ok) or a pre-partitioning legacy layout whose
@@ -142,7 +147,7 @@ class ManifestStore:
                     "found bare parquet files instead of run_id=* partitions; "
                     "migrate by reading the old layout and re-merging it"
                 )
-            return self.spark.createDataFrame([], MANIFEST_SCHEMA)
+            return self._empty()
         return self.spark.read.schema(MANIFEST_SCHEMA).parquet(self.path)
 
     def list_runs(self) -> list[str]:

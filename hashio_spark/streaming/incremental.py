@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hashio_spark.caching import release
 from hashio_spark.plans.validate import manifest_rows, validate
 from hashio_spark.sources.manifest_store import ManifestStore
 
@@ -43,11 +44,16 @@ def validation_sink(
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
         if not batch_df.head(1):
             return
-        res = validate(batch_df, catalog=catalog, algo=algo, persist_violations=True,
+        # one read of the batch into validate's per-doc frame, released
+        # after the merge; the violations only feed the report's counts,
+        # so they are not persisted
+        res = validate(batch_df, catalog=catalog, algo=algo, persist_violations=False,
                        with_sketches=with_sketches)
-        rows = manifest_rows(res, run_id=f"{run_id}", algo=algo, lineage=f"epoch={epoch_id}")
-        store.merge(rows, prefer_new=True)
-        res.violations.unpersist()
+        try:
+            rows = manifest_rows(res, run_id=f"{run_id}", algo=algo, lineage=f"epoch={epoch_id}")
+            store.merge(rows, prefer_new=True)
+        finally:
+            release(res.report)
 
     return _sink
 

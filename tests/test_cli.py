@@ -421,3 +421,77 @@ def test_validate_derives_partition_id_when_absent(spark, tmp_path, capsys):
     for r in mf.collect():
         rows.setdefault(r.run_id, []).append((r.partition_id, r.digest))
     assert sorted(rows["bare"]) == sorted(rows["bare2"])
+
+
+
+def _stage_input_records(sc) -> dict[int, int]:
+    """stage id -> input records, from the JVM status store (a file scan
+    counts rows, a cached-block read one record per cached batch)."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    stages = store.stageList(None, False, False, getattr(store, "stageList$default$4")(),
+                             getattr(store, "stageList$default$5")())
+    return {stages.apply(i).stageId(): stages.apply(i).inputRecords() for i in range(stages.size())}
+
+
+def test_validate_reads_corpus_once(io_dirs, spark, tmp_path, capsys):
+    """One CLI validate with every sink (manifest, violations, export)
+    reads the N docs once.  The catalog is read once too; the cached
+    per-doc frame, violations and report add one record per cached batch
+    they serve (a few dozen here), while a second corpus read would add
+    N more."""
+    sc = spark.sparkContext
+    n_docs = spark.read.parquet(io_dirs["docs"]).count()
+    n_cat = spark.read.parquet(io_dirs["catalog"]).count()
+    first = max(_stage_input_records(sc), default=-1) + 1
+    rc = main([
+        "validate", "--input", io_dirs["docs"], "--catalog", io_dirs["catalog"],
+        "--manifest", str(tmp_path / "m"), "--run-id", "once", "--algo", "md5",
+        "--violations-out", str(tmp_path / "v"), "--export", str(tmp_path / "hash.json"),
+    ])
+    assert rc == 0
+    capsys.readouterr()
+    read = sum(n for sid, n in _stage_input_records(sc).items() if sid >= first)
+    assert n_docs + n_cat <= read < 2 * n_docs + n_cat, (read, n_docs, n_cat)
+
+
+def test_validate_and_stream_leave_no_cached_rdd(io_dirs, spark, tmp_path, capsys):
+    """validate's per-doc frame, the persisted violations and the
+    materialized report are all released by the CLI and by the
+    streaming sink."""
+    from hashio_spark.sources.manifest_store import ManifestStore
+    from hashio_spark.streaming.incremental import stream_validation
+
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    rc = main([
+        "validate", "--input", io_dirs["docs"], "--catalog", io_dirs["catalog"],
+        "--manifest", str(tmp_path / "m"), "--run-id", "leak",
+        "--violations-out", str(tmp_path / "v"), "--export", str(tmp_path / "hash.json"),
+    ])
+    assert rc == 0
+    capsys.readouterr()
+    assert jsc.getPersistentRDDs().size() == before
+
+    docs = spark.read.parquet(io_dirs["docs"])
+    stream = spark.readStream.schema(docs.schema).option("maxFilesPerTrigger", 2).parquet(io_dirs["docs"])
+    store = ManifestStore(spark, str(tmp_path / "sm"))
+    q = stream_validation(stream, store, "s", catalog=spark.read.parquet(io_dirs["catalog"]),
+                          checkpoint_dir=str(tmp_path / "ck"))
+    q.awaitTermination()
+    assert len([p for p in q.recentProgress if p["numInputRows"] > 0]) > 1
+    assert store.list_runs() == ["s"]
+    assert jsc.getPersistentRDDs().size() == before
+
+
+def test_validate_empty_report_summary_is_null(spark, tmp_path, capsys):
+    """A JSONL input whose every line is bad yields an empty report; the
+    summary line still reads docs/violations null (SQL sum over no rows)."""
+    src = tmp_path / "bad.jsonl"
+    src.write_text("NOT JSON\n{broken\n")
+    rc = main(["validate", "--input", str(src), "--format", "jsonl",
+               "--manifest", str(tmp_path / "m"), "--export", str(tmp_path / "hash.json")])
+    assert rc == 0
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["docs"] is None and out["violations"] is None
+    assert out["quarantined"] == 2

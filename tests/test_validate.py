@@ -74,22 +74,68 @@ def test_pass_fail_consistency(result):
     assert joined.filter(~F.col("ok")).count() == 0
 
 
-def test_side_stats_off_matches_on_shared_columns(docs, catalog, result):
-    """side_stats=False must drop ONLY the side-scan ride-alongs (string
-    min/max, quality histogram) and leave every shared report column —
-    counts, digests, violation counts, pass flags — value-identical."""
-    slim = validate(docs, catalog, algo="md5", side_stats=False,
-                    persist_violations=False)
-    full_cols = set(result.report.columns)
-    slim_cols = set(slim.report.columns)
-    dropped = full_cols - slim_cols
-    assert dropped  # the ride-alongs actually left
-    assert all(c.endswith(("_min", "_max")) or c == "quality_hist" for c in dropped)
-    shared = sorted(slim_cols)
-    a = {r["partition_id"]: tuple(r[c] for c in shared) for r in slim.report.collect()}
-    b = {r["partition_id"]: tuple(r[c] for c in shared)
-         for r in result.report.select(*shared).collect()}
-    assert a == b
+def test_report_projection_prunes_unreferenced_aggregates(docs, catalog, result):
+    """The one report aggregation carries string min/max and the quality
+    histogram; a caller projecting only (row_count, digest,
+    violation_count, passed) — the flagship catalog query — must not pay
+    for them: Catalyst prunes the unreferenced aggregates, and the kept
+    columns are value-identical to the full report's."""
+    from hashio_spark.caching import release
+
+    res = validate(docs, catalog, algo="md5", persist_violations=False)
+    cols = ["partition_id", "row_count", "digest", "violation_count", "passed"]
+    full_plan = res.report._jdf.queryExecution().optimizedPlan().toString()
+    assert all(a in full_plan for a in ("min(doc_id", "max(doc_id", "quality_hist"))
+    slim = res.report.select(*cols)
+    plan = slim._jdf.queryExecution().optimizedPlan().toString()
+    assert not any(a in plan for a in ("min(doc_id", "max(doc_id", "quality_hist"))
+    assert sorted(map(tuple, slim.collect())) == sorted(
+        map(tuple, result.report.select(*cols).collect()))
+    release(res.report)
+
+
+def test_report_sorts_no_spans_width_rows(spark, tmp_path):
+    """The report's one aggregation is a SortAggregate (string min/max)
+    over the cached per-doc frame; the plan-audit detector finds no
+    SortAggregate fed by the spans file scan there, and still flags that
+    old shape when it is built by hand."""
+    from tools.plan_audit import wide_sort_aggregates
+
+    from hashio_spark.caching import release
+    from hashio_spark.datagen import asset_catalog, documents_interleaved
+
+    documents_interleaved(spark, 300, n_partitions=4).write.parquet(str(tmp_path / "d"))
+    docs = spark.read.parquet(str(tmp_path / "d"))
+    res = validate(docs, asset_catalog(spark, 100), algo="fast", persist_violations=False)
+    plan = res.report._jdf.queryExecution().executedPlan()
+    assert "SortAggregate" in plan.toString()
+    assert wide_sort_aggregates(plan) == []
+    wide = docs.groupBy("partition_id").agg(F.min("doc_id"), F.sum(F.size("spans")))
+    assert wide_sort_aggregates(wide._jdf.queryExecution().executedPlan())
+    release(res.report)
+
+
+def test_duplicate_charged_to_smallest_partition(spark):
+    """A doc_id present in partitions 3 and 1 is charged to partition 1,
+    whatever the input layout (first() would follow shuffle order, so a
+    partition's stored violation_count/passed could flip between runs)."""
+    from hashio_spark.caching import release
+    from hashio_spark.operators.constraints import duplicate_keys
+
+    span = [("text", "x", None, 0)]
+    docs = spark.createDataFrame(
+        [("d", 3, span), ("d", 1, span), ("e", 2, span)],
+        "doc_id string, partition_id int, "
+        "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
+    )
+    for n in (1, 7):
+        laid_out = docs.repartition(n)
+        assert [(r.doc_id, r.partition_id) for r in duplicate_keys(laid_out).collect()] == [("d", 1)]
+        res = validate(laid_out, algo="md5")
+        got = {r.partition_id: r.violation_count for r in res.report.collect()}
+        assert got == {1: 1, 2: 0, 3: 0}
+        res.violations.unpersist()
+        release(res.report)
 
 
 def test_clean_table_passes(spark):
