@@ -216,15 +216,9 @@ def _minhash4_rows(texts: pd.Series, with_sets: bool) -> pd.DataFrame:
                 out["sh"].append([])
             continue
         shingles = [" ".join(toks[i : i + 3]) for i in range(n)]
-        best = [None, None, None, None]
-        for s in shingles:
-            b = s.encode("utf-8")
-            for k in range(4):
-                d = md5(prefs[k] + b).digest()
-                if best[k] is None or d < best[k]:
-                    best[k] = d
-        for k in range(4):
-            out[f"sig{k}"].append(best[k].hex())
+        bs = [s.encode("utf-8") for s in shingles]
+        for k, p in enumerate(prefs):
+            out[f"sig{k}"].append(min([md5(p + b).digest() for b in bs]).hex())
         if with_sets:
             # array_distinct semantics: first occurrence order
             out["sh"].append(list(dict.fromkeys(shingles)))

@@ -7,7 +7,7 @@ run inside whole-stage codegen on the scan output.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # minimal per-language stopword regexes for the n-gram/stopword heuristic
@@ -121,12 +121,48 @@ def word_shingles_from_tokens(toks_col: Column | str, k: int = 3) -> Column:
     Catalyst will not collapse the tokenization projection back into the
     consumer (CollapseProject only inlines cheap expressions referenced
     more than once).
+
+    This array form is for consumers that need the whole shingle set in
+    one row (set ops, sizes).  A consumer that explodes the shingles
+    anyway should call :func:`word_shingle_rows`, which builds the same
+    shingles with no lambda.
     """
     tk = _c(toks_col) if isinstance(toks_col, str) else toks_col
     idx = F.when(
         F.size(tk) >= k, F.sequence(F.lit(1), F.size(tk) - (k - 1))
     ).otherwise(F.array().cast("array<int>"))
     return F.transform(idx, lambda i: F.concat_ws(" ", F.slice(tk, i, k)))
+
+
+def word_shingle_rows(df: DataFrame, toks_col: str, k: int = 3) -> DataFrame:
+    """One row per k-word shingle of the tokens column ``toks_col``
+    (array<string>), in token order, with every other column of ``df``
+    carried and the shingle in ``gram``.  A row whose tokens are NULL or
+    fewer than ``k`` keeps exactly one row, with a NULL shingle.
+
+    The shingles equal :func:`word_shingles_from_tokens`' element by
+    element, but no lambda builds them: the k shifted slices
+    ``slice(toks, j, n)`` (``n = size - (k-1)``) are zipped into one
+    struct per position, and each struct's fields are joined with
+    ``concat_ws``.  All of it compiles under whole-stage codegen; the
+    ``transform`` form is interpreted per element.
+
+    Two guards are load-bearing:
+    * ``explode_outer``, not ``explode``: ``explode`` infers a
+      ``size(...) > 0 AND isnotnull(...)`` filter on its input, which is
+      pushed into the scan and re-runs the whole shingle pipeline per
+      row (BENCH.md finding #8);
+    * the NULL struct of a shingle-less row maps to a NULL shingle, not
+      to ``concat_ws``' empty string.
+    """
+    tk = F.col(toks_col)
+    n = F.size(tk) - (k - 1)
+    zipped = F.arrays_zip(*[F.slice(tk, j + 1, n) for j in range(k)])
+    keep = [c for c in df.columns if c != toks_col]
+    rows = df.select(*keep, F.explode_outer(F.when(n >= 1, zipped)).alias("_z"))
+    z = F.col("_z")
+    gram = F.when(z.isNotNull(), F.concat_ws(" ", *[z[str(j)] for j in range(k)]))
+    return rows.select(*keep, gram.alias("gram"))
 
 
 def word_shingles_expr(col: Column | str = "text", k: int = 3) -> Column:

@@ -108,8 +108,9 @@ def crosscorpus_neardup(
     shingle set).
 
     Scale shape (train = 10^12 docs, benchmark = 10^4..10^6): both
-    corpora band through the SAME ``minhash_band_values`` expression
-    (per-row projections, no shuffle); ``dedupe.band_bipartite_join``
+    corpora band through the SAME ``minhash_signatures`` →
+    ``minhash_band_values`` pipeline, whose one exchange carries one
+    narrow signature row per doc; ``dedupe.band_bipartite_join``
     broadcasts the tiny benchmark band table, so the train corpus is
     never shuffled for the candidate join, and caps train band sizes
     counted over the bench-present slice only; candidates then pass the

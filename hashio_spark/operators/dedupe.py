@@ -7,9 +7,10 @@ Five tiers, all shuffle-architected for 10^12-row inputs:
   ``/root/reference/lib/hashio/encoder.py:463-500``, with the in-memory
   hash_map replaced by a hash aggregation).
 * :func:`minhash_signatures` + :func:`lsh_candidate_pairs` — MinHash over
-  word shingles, banded LSH: shingle→minhash per row (no shuffle),
-  explode to (band, doc) and self-join on band (one shuffle whose volume
-  is n_docs × n_bands, independent of document size).  Giant bands (a
+  word shingles, banded LSH: shingle rows → per-doc minima in one hash
+  aggregate (one exchange of one narrow row per doc), explode to
+  (band, doc) and self-join on band (one shuffle whose volume is
+  n_docs × n_bands, independent of document size).  Giant bands (a
   band value shared by a near-dup cluster of size c produces c² pairs)
   are capped with ``max_band_size`` — standard LSH practice to stop a
   boilerplate cluster from quadratic blowup.
@@ -124,24 +125,36 @@ def exact_duplicates(
 
 def minhash_signatures(df: DataFrame, key_col: str, text_col: str, n_perm: int = 16, shingle_k: int = 3) -> DataFrame:
     """(key, sig array<bigint>) — permutation i = min over shingles of
-    xxhash64(i, shingle).  Pure column expressions, no shuffle.
+    xxhash64(i, shingle); one output row per input row, also when keys
+    repeat.  A doc with no shingle (NULL text, fewer than ``shingle_k``
+    tokens) gets ``n_perm`` NULLs.
 
-    Staged as three projections (tokens → shingles → signatures) so each
-    intermediate is a bound attribute: higher-order lambdas are
-    interpreted without CSE, so an inline split/shingle tree would be
-    re-executed per array element / per permutation — measured ~6× on
-    this operator at sf0.1 (BENCH.md finding #7).  CollapseProject keeps
-    the stages separate (non-cheap producers referenced repeatedly)."""
-    from hashio_spark.functions.text import word_shingles_from_tokens
+    No lambda anywhere: :func:`~hashio_spark.functions.text.word_shingle_rows`
+    explodes the shingles once, and one hash aggregate keyed by a per-row
+    id takes all ``n_perm`` minima.  That is one codegen stage plus a
+    partial/final ``HashAggregate``.  A doc's shingle rows are
+    contiguous, so the partial side already folds each doc to one row,
+    and the one exchange carries one narrow row per doc (id, key,
+    ``n_perm`` longs).  It pays: ``transform``/``array_min`` lambdas are
+    interpreted element by element, ``n_perm + 1`` of them per doc,
+    while here every shingle × permutation hash is compiled code.  The
+    hash of a NULL shingle is guarded, as ``xxhash64(i, NULL)`` is a
+    non-NULL hash of ``i``."""
+    from hashio_spark.functions.text import word_shingle_rows
 
-    toked = df.select(F.col(key_col).alias("key"), F.split(F.col(text_col), r"\s+").alias("_toks"))
-    shingled = toked.select("key", word_shingles_from_tokens("_toks", shingle_k).alias("_sh"))
-
-    def perm(i: int) -> Column:
-        return F.array_min(F.transform(F.col("_sh"), lambda s: F.xxhash64(F.lit(i), s)))
-
-    sig = F.array(*[perm(i) for i in range(n_perm)])
-    return shingled.select("key", sig.alias("sig"))
+    toked = df.select(
+        F.monotonically_increasing_id().alias("_rid"),
+        F.col(key_col).alias("key"),
+        F.split(F.col(text_col), r"\s+").alias("_toks"),
+    )
+    s = F.col("gram")
+    mins = [F.min(F.when(s.isNotNull(), F.xxhash64(F.lit(i), s))).alias(f"_m{i}") for i in range(n_perm)]
+    return (
+        word_shingle_rows(toked, "_toks", shingle_k)
+        .groupBy("_rid", "key")
+        .agg(*mins)
+        .select("key", F.array(*[f"_m{i}" for i in range(n_perm)]).alias("sig"))
+    )
 
 
 def minhash_band_values(sig_df: DataFrame, n_bands: int = 4, n_perm: int = 16) -> DataFrame:
@@ -166,7 +179,7 @@ def minhash_band_values(sig_df: DataFrame, n_bands: int = 4, n_perm: int = 16) -
                 F.lit(i),
                 F.concat_ws(
                     ",",
-                    F.transform(F.slice(F.col("sig"), i * rows_per_band + 1, rows_per_band), lambda x: x.cast("string")),
+                    F.slice(F.col("sig"), i * rows_per_band + 1, rows_per_band).cast("array<string>"),
                 ),
             )
         )
@@ -384,9 +397,10 @@ def duplicate_ngrams(
     from whole payloads to intra-document spans.
 
     Scale shape (10^12 docs):
-    * shingling is a per-row projection over a staged tokenization (no
-      shuffle; the explode_outer form sidesteps the inferred-filter
-      recompute, BENCH.md finding #8);
+    * shingle rows come from ``functions.text.word_shingle_rows`` over a
+      staged tokenization (compiled, no lambda, no shuffle; its
+      explode_outer form sidesteps the inferred-filter recompute,
+      BENCH.md finding #8);
     * first aggregation keys (gram, doc) — map-side partial counts
       collapse within-doc repeats before the shuffle, so shuffle volume
       is bounded by DISTINCT grams per doc, not token count;
@@ -398,15 +412,12 @@ def duplicate_ngrams(
       then reports the hash, joinable back to one exemplar if needed).
       ``hashed=False`` keeps raw span strings (oracle-parity tier).
     """
+    from hashio_spark.functions.text import word_shingle_rows
+
     toked = df.select(
         F.col(key_col).alias("key"), F.split(F.col(text_col), r"\s+").alias("_toks")
     )
-    from hashio_spark.functions.text import word_shingles_from_tokens
-
-    shingled = toked.select("key", word_shingles_from_tokens("_toks", k).alias("_sh"))
-    g = shingled.select("key", F.explode_outer("_sh").alias("gram")).filter(
-        F.col("gram").isNotNull()
-    )
+    g = word_shingle_rows(toked, "_toks", k).filter(F.col("gram").isNotNull())
     if hashed:
         g = g.select("key", F.xxhash64("gram").alias("gram"))
     per_doc = g.groupBy("gram", "key").agg(F.count(F.lit(1)).alias("_cnt"))

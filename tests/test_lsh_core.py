@@ -113,3 +113,70 @@ def test_crosscorpus_neardup_broadcast_shape(spark, build):
     for pat in (r"SortMergeJoin", r"BatchEvalPython", r"CartesianProduct",
                 r"SortAggregate", r"Exchange SinglePartition"):
         assert not re.search(pat, plan), f"forbidden /{pat}/ present"
+
+
+# Rows that pin the compiled signature form to the former lambda form:
+# NULL and empty text, too few tokens, whitespace runs at either end,
+# repeated shingles, non-ASCII tokens, and a key that repeats with two
+# different texts (two output rows).
+_EDGE_ROWS = [
+    ("n", None), ("e", ""), ("t1", "one"), ("t2", "one two"),
+    ("ws", "a  b c d"), ("lead", " a b c d"), ("trail", "a b c d "),
+    ("rep", "a b c a b c a b c"), ("utf", "naïve café über straße 東京 タワー"),
+    ("dup", "the quick brown fox jumps"), ("dup", "over the lazy sleeping dog"),
+    ("long", "the quick brown fox jumps over the lazy dog and runs far away"),
+]
+
+
+def _lambda_sigs(df, n_perm, k):
+    """The former transform/array_min form of ``minhash_signatures``."""
+    from hashio_spark.functions.text import word_shingles_from_tokens
+
+    toked = df.select(F.col("doc_id").alias("key"), F.split(F.col("text"), r"\s+").alias("_toks"))
+    sh = toked.select("key", word_shingles_from_tokens("_toks", k).alias("_sh"))
+
+    def perm(i: int):
+        return F.array_min(F.transform(F.col("_sh"), lambda s: F.xxhash64(F.lit(i), s)))
+
+    return sh.select("key", F.array(*[perm(i) for i in range(n_perm)]).alias("sig"))
+
+
+@pytest.mark.parametrize("n_perm, k", [(16, 3), (4, 2), (4, 4)])
+def test_minhash_signatures_match_lambda_form(spark, n_perm, k):
+    df = spark.createDataFrame(_EDGE_ROWS, "doc_id string, text string")
+    got = minhash_signatures(df, "doc_id", "text", n_perm=n_perm, shingle_k=k)
+    want = _lambda_sigs(df, n_perm, k)
+    assert got.count() == want.count() == len(_EDGE_ROWS)
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+    sigs = {r["key"]: r["sig"] for r in got.collect() if r["key"] != "dup"}
+    assert sigs["n"] == sigs["e"] == sigs["t1"] == [None] * n_perm
+
+
+def test_word_shingle_rows_match_array_form(spark):
+    from hashio_spark.functions.text import word_shingle_rows, word_shingles_from_tokens
+
+    df = spark.createDataFrame(list(enumerate(t for _, t in _EDGE_ROWS)), "doc_id int, text string")
+    toked = df.select("doc_id", F.split("text", r"\s+").alias("_toks"))
+    want = {r[0]: r[1] for r in toked.select("doc_id", word_shingles_from_tokens("_toks", 3)).collect()}
+    got: dict = {}
+    for r in word_shingle_rows(toked, "_toks", 3).collect():
+        got.setdefault(r["doc_id"], [])
+        if r["gram"] is not None:
+            got[r["doc_id"]].append(r["gram"])
+    assert got == want  # one row per doc at least, shingles in token order
+
+
+def test_minhash_signature_plan_is_compiled(spark):
+    """No interpreted lambda, no Filter over the shingle pipeline, no
+    SortAggregate: one generate stage and a partial/final HashAggregate."""
+    sig = minhash_signatures(_docs(spark), "doc_id", "text")
+    plan = _formatted(sig)
+    assert not re.search(r"lambdafunction", plan, re.I)
+    assert not re.search(r"\bFilter\b", plan)
+    assert not re.search(r"SortAggregate", plan)
+    tree = plan.split("\n\n")[0]
+    assert len(re.findall(r"HashAggregate \(\d+\)", tree)) == 2, tree
+    assert re.search(r"Functions \[\d+\]: \[partial_min\(", plan)
+    assert re.search(r"Functions \[\d+\]: \[min\(", plan)
+    assert re.search(r"Arguments: explode\(.*\], true, \[", plan)  # explode_outer

@@ -68,6 +68,9 @@ class _ShimXXH3_128(_ShimBase):
 
 @pytest.fixture(scope="module")
 def hashio_ref():
+    if not os.path.isdir(REF_LIB):
+        pytest.skip(f"reference implementation not installed at {REF_LIB}; "
+                    "the hash contract stays covered by the golden vectors in test_digests.py")
     shim = types.ModuleType("xxhash")
     shim.xxh64 = _ShimXXH64
     shim.xxh3_64 = _ShimXXH3_64
