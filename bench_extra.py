@@ -25,7 +25,9 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+from hashio_spark.session import host_cores  # noqa: E402
+
+CPUS = host_cores()
 # tmpfs shuffle, same as bench.py (must precede any JVM)
 _SHUFFLE_DIR = os.environ.get("BENCH_SHUFFLE_DIR", "/dev/shm/hashio-spark-shuffle")
 os.makedirs(_SHUFFLE_DIR, exist_ok=True)

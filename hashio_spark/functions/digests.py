@@ -31,6 +31,15 @@ from pyspark.sql.types import StringType
 
 from hashio_spark.functions.xxh import xxh64_hexdigest
 
+try:
+    # The one md5 constructor of every Python md5 kernel.  CPython's
+    # builtin md5 skips OpenSSL's per-object EVP set-up, which is most of
+    # the cost of hashing a 15-byte shingle; its ``copy()`` is a struct
+    # copy, so a kernel can hash a fixed prefix once and copy that state.
+    from _md5 import md5 as md5_new
+except ImportError:  # interpreters built without the builtin module
+    md5_new = hashlib.md5
+
 # ---------------------------------------------------------------------------
 # Scale path: builtin expressions (preferred in every pipeline)
 # ---------------------------------------------------------------------------
@@ -140,7 +149,7 @@ def _hexdigest_series(s: pd.Series, algo: str) -> pd.Series:
     if algo == "c4":
         return s.map(lambda v: _c4_from_sha512_hex(hashlib.sha512(_to_bytes(v)).hexdigest()))
     if algo in ("md5", "sha256", "sha512"):
-        fn = getattr(hashlib, algo)
+        fn = md5_new if algo == "md5" else getattr(hashlib, algo)
         return s.map(lambda v: fn(_to_bytes(v)).hexdigest())
     raise ValueError(f"unknown parity algo: {algo}")
 
@@ -177,51 +186,65 @@ def parity_hexdigest(data: bytes | str, algo: str = "xxh64") -> str:
 
 # ---------------------------------------------------------------------------
 # Arrow minhash kernel (text → 4-permutation md5 MinHash over 3-word
-# shingles).  Same rationale as the bloom lanes (BENCH.md finding #1): the
-# JVM md5 builtin funnels through the JCA provider and the shingle
-# pipeline runs as interpreted higher-order lambdas, so four md5-min
-# passes over ~2.6M shingles cost ~2.0 s at sf1.0; the hashlib loop below
-# is lock-free and skips the per-element expression interpreter — 1.0 s
-# for the same output (verified byte-identical via exceptAll in both
-# directions).  Token/shingle semantics replicate the JVM form exactly:
-# split on a single literal space (empty tokens kept, like Spark's
-# split), shingle = " ".join of 3 consecutive tokens, min taken on the
-# raw digest bytes (hex encoding is order-preserving).  Docs with <3
-# tokens or NULL text yield NULL signatures, matching the guarded
-# sequence() form and the oracle's generate_series(1, 0).
+# shingles), the one kernel behind every md5 LSH query.  Token/shingle
+# semantics replicate the oracle exactly: split on a single literal space
+# (empty tokens kept, like Spark's split), shingle = " ".join of 3
+# consecutive tokens, permutation k = md5(b"k|" + shingle), min taken on
+# the raw digest bytes (hex encoding is order-preserving).  Docs with <3
+# tokens or NULL text yield NULL signatures, matching the oracle's
+# generate_series(1, 0).
+#
+# The kernel splits each doc's UTF-8 bytes once: a space byte never
+# occurs inside a multibyte UTF-8 character, so the byte split equals the
+# str split.  Each permutation hashes its prefix once per Arrow batch; a
+# shingle costs one ``copy()`` of that state, one ``update`` and one
+# ``digest`` of the builtin md5 (:data:`md5_new`).  2,000 docs of 40-100
+# words on one core: 0.40 s with ``hashlib.md5(p + b)`` per shingle,
+# 0.16-0.18 s now, byte-identical.
+#
+# md5 stays in Python on purpose.  The compiled JVM form
+# (``text.word_shingle_rows`` + ``min(md5(concat('k|', gram)))`` in one
+# hash aggregate, the shape of the xxhash64 operator) gives identical
+# pairs but measured slower per ``dedupe_minhash_lsh`` run: 3.00 and
+# 2.44 s against this kernel's 1.99 and 1.91 s (20k docs of 40-100
+# words, two inputs, median of 6 in one session, 4 cores).  Spark's md5
+# goes through ``MessageDigest.getInstance`` per row (BENCH.md
+# finding #1).
 # ---------------------------------------------------------------------------
 
 _MINHASH_PREFS = [b"0|", b"1|", b"2|", b"3|"]
+_ABOVE_ANY_DIGEST = b"\xff" * 17  # sorts after every 16-byte digest
 
 
 def _minhash4_rows(texts: pd.Series, with_sets: bool) -> pd.DataFrame:
-    md5 = hashlib.md5
-    prefs = _MINHASH_PREFS
-    out: dict[str, list] = {f"sig{k}": [] for k in range(4)}
-    if with_sets:
-        out["sh"] = []
+    bases = [md5_new(p) for p in _MINHASH_PREFS]
+    sigs: list[list] = [[] for _ in bases]
+    sets: list = []
     for t in texts:
-        if t is None:
-            for k in range(4):
-                out[f"sig{k}"].append(None)
+        toks = None if t is None else t.encode("utf-8").split(b" ")
+        if toks is None or len(toks) < 3:
+            for sig in sigs:
+                sig.append(None)
             if with_sets:
-                out["sh"].append(None)
+                sets.append(None if toks is None else [])
             continue
-        toks = t.split(" ")
-        n = len(toks) - 2
-        if n < 1:
-            for k in range(4):
-                out[f"sig{k}"].append(None)
-            if with_sets:
-                out["sh"].append([])
-            continue
-        shingles = [" ".join(toks[i : i + 3]) for i in range(n)]
-        bs = [s.encode("utf-8") for s in shingles]
-        for k, p in enumerate(prefs):
-            out[f"sig{k}"].append(min([md5(p + b).digest() for b in bs]).hex())
+        bs = list(map(b" ".join, zip(toks, toks[1:], toks[2:])))
+        for sig, base in zip(sigs, bases):
+            copy = base.copy
+            m = _ABOVE_ANY_DIGEST
+            for b in bs:
+                h = copy()
+                h.update(b)
+                d = h.digest()
+                if d < m:
+                    m = d
+            sig.append(m.hex())
         if with_sets:
             # array_distinct semantics: first occurrence order
-            out["sh"].append(list(dict.fromkeys(shingles)))
+            sets.append([b.decode("utf-8") for b in dict.fromkeys(bs)])
+    out = {f"sig{k}": sig for k, sig in enumerate(sigs)}
+    if with_sets:
+        out["sh"] = sets
     return pd.DataFrame(out)
 
 
@@ -231,8 +254,8 @@ _minhash_udf_cache: dict[bool, object] = {}
 def minhash4_md5_arrow(with_sets: bool = False):
     """Pandas UDF: text → struct(sig0..sig3[, sh]) — the 4-permutation
     md5 MinHash (and optionally the distinct shingle set) in one Arrow
-    batch pass.  See the module-level kernel note for semantics and the
-    measured 2× over the JVM expression form."""
+    batch pass.  See the kernel note above :func:`_minhash4_rows` for
+    semantics and measurements."""
     if with_sets not in _minhash_udf_cache:
         from pyspark.sql.types import ArrayType, StructField, StructType
 

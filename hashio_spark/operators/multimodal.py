@@ -20,12 +20,13 @@ Scale design:
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from hashio_spark.functions.digests import md5_new
 
 MEDIA_FEATURE_SCHEMA = (
     "doc_id string, media_ref string, media_kind string, n_bytes long, "
@@ -37,7 +38,7 @@ def _decode_stub(kind: str, data: bytes) -> dict:
     """Deterministic fake decoder: real decoders raise NotImplementedError
     until codec libs are installed; the fake derives plausible metadata
     from a digest of the bytes so pipelines and tests are exercisable."""
-    h = hashlib.md5(data or b"").digest()
+    h = md5_new(data or b"").digest()
     if kind == "image":
         return {"width": 64 + h[0] * 8, "height": 64 + h[1] * 8, "duration_ms": None}
     if kind in ("audio", "video"):
@@ -58,7 +59,7 @@ def extract_media_features(media: DataFrame) -> DataFrame:
                 "media_ref": pdf["media_ref"],
                 "media_kind": pdf["media_kind"],
                 "n_bytes": pdf["content"].map(lambda b: len(b) if b is not None else 0).astype("int64"),
-                "content_digest": pdf["content"].map(lambda b: hashlib.md5(b or b"").hexdigest()),
+                "content_digest": pdf["content"].map(lambda b: md5_new(b or b"").hexdigest()),
             })
             feats = [
                 _decode_stub(k, b if b is not None else b"")
@@ -138,7 +139,7 @@ def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
                     ts = (dur * i) // n_frames
                     # stub "frame grab": digest of (bytes, frame index) —
                     # deterministic stand-in for the decoded frame tensor
-                    fd = hashlib.md5(data + i.to_bytes(4, "big")).hexdigest()
+                    fd = md5_new(data + i.to_bytes(4, "big")).hexdigest()
                     rows.append((doc_id, ref, i, ts, fd, meta["width"], meta["height"]))
             yield pd.DataFrame(
                 rows,
@@ -173,7 +174,7 @@ def resize_images(media: DataFrame, max_side: int = 256) -> DataFrame:
                 w, h = meta["width"], meta["height"]
                 scale = min(1.0, max_side / max(w, h))
                 rw, rh = max(1, int(w * scale)), max(1, int(h * scale))
-                rd = hashlib.md5(data + f"|{rw}x{rh}".encode()).hexdigest()
+                rd = md5_new(data + f"|{rw}x{rh}".encode()).hexdigest()
                 rows.append((doc_id, ref, w, h, rw, rh, rd))
             yield pd.DataFrame(
                 rows,

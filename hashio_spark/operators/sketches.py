@@ -19,12 +19,12 @@ commutative/associative → map-side partials everywhere.
 
 from __future__ import annotations
 
-import hashlib
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
+
+from hashio_spark.functions.digests import md5_new
 
 SKETCH_KEY = "doc_id_hll"
 
@@ -97,7 +97,8 @@ def bloom_lanes_arrow(
     key, n_lanes: int = _BLOOM_LANES, n_hashes: int = _BLOOM_HASHES
 ) -> F.Column:
     """Per-row bloom lanes as ONE ``array<long>`` column, hashed in an
-    Arrow pandas UDF (per-process hashlib) instead of ``k`` builtin
+    Arrow pandas UDF (per-process :data:`~hashio_spark.functions.digests.md5_new`,
+    one ``bf{j}|`` prefix state per batch, copied per key) instead of ``k`` builtin
     ``md5`` calls per row — Spark's JCA md5 serializes on a JVM-wide
     lock (BENCH.md finding #1), so the expression form convoys at high
     thread counts on exactly the row-level builder path this serves.
@@ -109,7 +110,7 @@ def bloom_lanes_arrow(
 
     @F.pandas_udf(ArrayType(LongType()))
     def _lanes(s: pd.Series) -> pd.Series:
-        prefixes = [f"bf{j}|".encode() for j in range(n_hashes)]
+        bases = [md5_new(f"bf{j}|".encode()) for j in range(n_hashes)]
         out = []
         for v in s:
             if v is None:
@@ -117,8 +118,10 @@ def bloom_lanes_arrow(
                 continue
             raw = v.encode() if isinstance(v, str) else bytes(v)
             lanes = [0] * n_lanes
-            for pref in prefixes:
-                p = int(hashlib.md5(pref + raw).hexdigest()[:15], 16) % n_bits
+            for base in bases:
+                h = base.copy()
+                h.update(raw)
+                p = int(h.hexdigest()[:15], 16) % n_bits
                 lanes[p // _LANE_BITS] |= 1 << (p % _LANE_BITS)
             out.append(lanes)
         return pd.Series(out)
@@ -138,7 +141,7 @@ def partition_fingerprint(
     the only shuffle is n_lanes longs per partition.  False-positive
     rate ≈ (1-e^{-kn/m})^k: ~0.26% at 1 000 keys/partition, k=4,
     m=1008; size the lanes up for bigger partitions.  Row-level hashing
-    runs in :func:`bloom_lanes_arrow` (lock-free hashlib); the staged
+    runs in :func:`bloom_lanes_arrow` (lock-free Python md5); the staged
     ``_bl`` array is a bound attribute, so the 16 ``element_at`` reads
     cost no recompute."""
     rows = df.select(F.col(part_col), bloom_lanes_arrow(key_col, n_lanes, n_hashes).alias("_bl"))

@@ -218,7 +218,7 @@ def validate(
         # doc_id bloom fingerprint: 16 bit_or longs per partition, so
         # later point lookups ("was doc X validated?") prune from manifest
         # rows alone (sketches.manifest_probe).  Lanes come from the Arrow
-        # kernel (lock-free hashlib md5 — BENCH.md finding #1).
+        # kernel (lock-free Python md5 — BENCH.md finding #1).
         pre = pre.withColumn("_bl", bloom_lanes_arrow(F.col("doc_id").cast("string")))
         aggs.append(bloom_agg_expr("_bl").alias(BLOOM_KEY))
     report = pre.groupBy("partition_id").agg(*aggs)

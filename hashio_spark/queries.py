@@ -346,10 +346,12 @@ def _minhash_md5(d: DataFrame, *carry: str, drop_short: bool, with_sets: bool) -
     if drop_short:
         d = d.filter(F.size(F.split(F.col("text"), " ")) >= 3)
     # the whole text → shingles → 4×(md5, min) pipeline runs in ONE Arrow
-    # kernel (functions/digests.minhash4_md5_arrow): the former JVM form
-    # paid four interpreted higher-order md5 passes through the JCA lock
-    # (BENCH.md finding #1) — measured 2.0 s → 1.0 s at sf1.0 for
-    # byte-identical output.
+    # kernel (functions/digests.minhash4_md5_arrow).  md5 stays in Python:
+    # the compiled JVM form (shingle rows + min(md5) in one hash
+    # aggregate) gives the same pairs but measured 3.00 and 2.44 s per
+    # dedupe_minhash_lsh against the kernel's 1.99 and 1.91 s (20k docs,
+    # one session, 4 cores; JVM md5 pays a JCA lookup per row, BENCH.md
+    # finding #1).
     s = d.select("doc_id", *carry, minhash4_md5_arrow(with_sets)(F.col("text")).alias("_s"))
     sets = [F.col("_s.sh").alias("sh")] if with_sets else []
     return s.select("doc_id", *carry, *sets, *[F.col(f"_s.sig{k}").alias(f"sig{k}") for k in range(4)])
@@ -3193,7 +3195,7 @@ def partition_bloom_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from hashio_spark.functions.digests import parity_udf
 
-    # Arrow md5 (lock-free hashlib) for the row-level digest — the JVM
+    # Arrow md5 (lock-free Python md5) for the row-level digest — the JVM
     # builtin serializes on the JCA lock (BENCH.md finding #1).  NULL
     # text must stay NULL (the oracle's md5(NULL) is NULL, while the
     # parity kernel hashes b"" for reference parity — ADVICE r5): the
@@ -3260,7 +3262,7 @@ def bloom_probe_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from hashio_spark.functions.digests import parity_udf
 
-    # Arrow md5 (lock-free hashlib) for the row-level digest — the JVM
+    # Arrow md5 (lock-free Python md5) for the row-level digest — the JVM
     # builtin serializes on the JCA lock (BENCH.md finding #1).  NULL
     # text stays NULL to match the oracle's md5(NULL) (ADVICE r5, same
     # guard as partition_bloom_q).

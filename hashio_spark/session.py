@@ -4,6 +4,7 @@ Local-mode defaults mirror what we'd set fleet-wide on a real cluster:
 AQE on (runtime re-plan + skew-join splitting), shuffle partitions sized
 to cores (not the 200 default), Arrow enabled for the pandas-UDF parity
 kernels, UTC session timezone so DuckDB oracle comparisons are stable.
+Cores and driver memory default to what the host has.
 """
 
 from __future__ import annotations
@@ -13,6 +14,29 @@ import os
 from pyspark.sql import SparkSession
 
 
+# share of the host's physical memory given to the driver JVM's heap
+# (local mode: the driver is the only executor) when SPARK_DRIVER_MEMORY
+# is unset
+_DRIVER_MEMORY_SHARE = 0.5
+
+
+def host_cores() -> int:
+    """``$SPARK_GRAFT_CPUS`` if set, else the host's CPU count."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
+def host_driver_memory() -> str:
+    """``$SPARK_DRIVER_MEMORY`` if set, else :data:`_DRIVER_MEMORY_SHARE`
+    of the host's physical memory in whole GiB (at least ``1g``)."""
+    if os.environ.get("SPARK_DRIVER_MEMORY"):
+        return os.environ["SPARK_DRIVER_MEMORY"]
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):  # no sysconf (Windows)
+        total = 2 << 30
+    return f"{max(1, int(total * _DRIVER_MEMORY_SHARE) >> 30)}g"
+
+
 def get_spark(
     app: str = "hashio-spark",
     cores: int | None = None,
@@ -20,7 +44,7 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = host_cores()
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
     # Scan split size (guide §6): the sandbox testdata is single-file
@@ -43,7 +67,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", host_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

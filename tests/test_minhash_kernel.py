@@ -1,10 +1,17 @@
 """The Arrow minhash kernel (functions/digests.minhash4_md5_arrow) must
-be byte-identical to the JVM expression form it replaced, including the
-NULL/short-doc contract and the shingle-set ride-along."""
+be byte-identical to the JVM expression form it replaced and to a plain
+hashlib reference, including the NULL/short-doc contract, multibyte and
+whitespace edge cases, the hashlib fallback and the shingle-set
+ride-along."""
+
+import hashlib
+import importlib.util
+import sys
 
 import pandas as pd
 from pyspark.sql import functions as F
 
+from hashio_spark.functions import digests
 from hashio_spark.functions.digests import _minhash4_rows, minhash4_md5_arrow
 
 
@@ -55,10 +62,61 @@ def test_kernel_sets_are_distinct_in_first_occurrence_order():
 
 def test_kernel_min_is_over_hex_order():
     # the min is taken on digest bytes; hex encoding must agree
-    import hashlib
-
     out = _minhash4_rows(pd.Series(["p q r s"]), with_sets=False)
     shingles = ["p q r", "q r s"]
     for k in range(4):
         want = min(hashlib.md5(f"{k}|{s}".encode()).hexdigest() for s in shingles)
         assert out[f"sig{k}"][0] == want
+
+
+_EDGE_DOCS = [
+    "naïve café über straße façade",          # 2-byte UTF-8
+    "日本語 の テキスト です ね",               # 3-byte UTF-8
+    "emoji 😀 takes 🚀 four bytes",            # 4-byte UTF-8
+    "nbsp\u00a0and ideographic\u3000space are not split",
+    "a\tb c\td e",                             # tab stays inside a token
+    "x  y z  w",                               # double spaces -> empty tokens
+    " leading and trailing ",                  # boundary empties
+    "  ",                                      # three empty tokens -> one shingle
+    "a b",                                     # <3 tokens
+    "",
+    None,
+]
+
+
+def _reference_sigs(text):
+    """The oracle's definition in plain hashlib over the str split."""
+    if text is None:
+        return [None] * 4
+    toks = text.split(" ")
+    shingles = [" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)]
+    if not shingles:
+        return [None] * 4
+    return [min(hashlib.md5(f"{k}|{s}".encode()).hexdigest() for s in shingles) for k in range(4)]
+
+
+def test_kernel_matches_hashlib_reference_on_multibyte_and_whitespace():
+    out = _minhash4_rows(pd.Series(_EDGE_DOCS), with_sets=False)
+    for i, text in enumerate(_EDGE_DOCS):
+        assert [out[f"sig{k}"][i] for k in range(4)] == _reference_sigs(text), text
+
+
+def test_kernel_hashlib_fallback_is_identical(monkeypatch):
+    # a fresh copy of the module, imported while ``_md5`` cannot be
+    # imported, must fall back to hashlib.md5 and give the same output
+    monkeypatch.setitem(sys.modules, "_md5", None)
+    spec = importlib.util.spec_from_file_location("_digests_without_md5", digests.__file__)
+    fallback = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(fallback)
+    assert fallback.md5_new is hashlib.md5
+    texts = pd.Series(_EDGE_DOCS + ["the quick brown fox jumps over the lazy dog"])
+    for with_sets in (False, True):
+        got = fallback._minhash4_rows(texts, with_sets)
+        assert got.equals(_minhash4_rows(texts, with_sets))
+
+
+def test_kernel_sets_are_str_in_first_occurrence_order():
+    out = _minhash4_rows(pd.Series(["über a über a über", "x  y z"]), with_sets=True)
+    assert out["sh"][0] == ["über a über", "a über a"]
+    assert out["sh"][1] == ["x  y", " y z"]
+    assert all(type(s) is str for sets in out["sh"] for s in sets)
