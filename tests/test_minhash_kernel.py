@@ -53,11 +53,16 @@ def test_kernel_matches_jvm_form(spark):
 
 
 def test_kernel_sets_are_distinct_in_first_occurrence_order():
-    out = _minhash4_rows(pd.Series(["a b c a b c a b c", None, "x y"]), with_sets=True)
+    texts = ["a b c a b c a b c", None, "x y", "über a über a über", "x  y z"]
+    out = _minhash4_rows(pd.Series(texts), with_sets=True)
     assert out["sh"][0] == ["a b c", "b c a", "c a b"]
     assert out["sh"][1] is None
     assert out["sh"][2] == []
     assert out["sig0"][1] is None and out["sig0"][2] is None
+    # decoded back to str, multibyte and empty tokens included
+    assert out["sh"][3] == ["über a über", "a über a"]
+    assert out["sh"][4] == ["x  y", " y z"]
+    assert all(type(s) is str for sets in out["sh"][3:] for s in sets)
 
 
 def test_kernel_min_is_over_hex_order():
@@ -113,10 +118,3 @@ def test_kernel_hashlib_fallback_is_identical(monkeypatch):
     for with_sets in (False, True):
         got = fallback._minhash4_rows(texts, with_sets)
         assert got.equals(_minhash4_rows(texts, with_sets))
-
-
-def test_kernel_sets_are_str_in_first_occurrence_order():
-    out = _minhash4_rows(pd.Series(["über a über a über", "x  y z"]), with_sets=True)
-    assert out["sh"][0] == ["über a über", "a über a"]
-    assert out["sh"][1] == ["x  y", " y z"]
-    assert all(type(s) is str for sets in out["sh"] for s in sets)
