@@ -1,44 +1,22 @@
-"""Benchmark harness (driver-run per round → BENCH_r{N}.json).
+"""Catalog timer: wall time of each benchmarked catalog query at one scale.
 
-Headline metric: docs/sec through the flagship validation pass (full
-stats + constraint + digest, BASELINE.json) over a deterministic
-synthetic interleaved-document table (datagen, seed 42 — no external
-data), plus wall-times for the catalog queries at $SPARK_GRAFT_SF_DIR.
+    python bench.py [query ...]
 
-Scaling evidence (BASELINE.json north rule; no real cluster in this
-sandbox): the SAME job at two parallelism levels — N and 4N cores
-(local[N] vs local[4N], per the driver's sanctioned proxy) — reporting
-throughput at both plus efficiency = (T_N / T_4N) / 4.
+Times every name in ``BENCH_QUERIES`` (REGISTRY queries) plus the two
+xxhash64 fast-tier legs by default, or only the named legs, over the
+parquet tables in ``$SPARK_GRAFT_SF_DIR`` (default
+``/root/testdata/sf0.1``).  One ``get_spark()`` session with host
+defaults runs every leg.  Each pass clears the cache first and forces
+the result with ``.count()``; a leg that takes over 1 s gets a second
+pass and keeps the faster.
 
-Methodology against this sandbox's noisy hypervisor (BENCH.md):
-* interleaved A/B/A/B sessions (min-of-all per topology) so a load
-  spike poisons at most one batch, not one whole topology;
-* two warmup passes per session (the C2 tail runs through the second
-  pass: settled-JVM passes over the warmup table measured 10.7 → 7.2
-  → 5.1 s after a single warmup — one pass leaves the first timed
-  pass ~1.3-2× inflated);
-* per-pass poisoning detection: a pass whose wall-clock exceeds
-  ~1.6× (JVM cpu-time / cores) ran starved — retry it (bounded);
-* single-JVM local[N] topologies: multi-JVM local-cluster measurements
-  are recorded in BENCH.md but are 3-10× erratic here (safepoint ×
-  hypervisor interaction), so the recorded number uses the stable shape.
+Prints one JSON line on stdout:
 
-Fail-soft output contract (round-4 lesson — BENCH_r04.json was rc=124/
-parsed=null because ONE line printed only at the very end): a COMPLETE
-JSON line for everything measured so far is printed after EACH section
-(scaling+flagship → alt-topology → catalog → fast tier), so the driver's
-last-line parse reflects every finished section no matter where a wall-
-budget kill lands.  Section order puts the north rule's binding number
-(scaling efficiency) first, and keeps every subprocess-isolated scaling
-batch ahead of the catalog so the parent process owns no gateway JVM
-while a topology is being measured.  ``BENCH_BUDGET_S`` (default 1200)
-skips remaining sections when exceeded; ``BENCH_FULL=1`` restores the
-large campaign (12M docs, fast tier).
+    {"metric": ..., "value": <sum of legs, s>, "unit": "sec",
+     "sf": <SF dir>, "queries": {<leg>: <s>, ...}}
 
-Final line shape:
-  {"metric": ..., "value": <total sec>, "unit": "sec",
-   "queries": {...}, "sf": ..., "flagship": {...},
-   "scaling": {...}, "scaling_alt": {...}}
+The flagship's end-to-end record is perfbench's ``validate_cli``
+workload (``perfbench/run.py``), not this timer.
 """
 
 from __future__ import annotations
@@ -51,27 +29,9 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-FULL = os.environ.get("BENCH_FULL", "") == "1"
-# Wall budget for the whole campaign: the driver killed the round-4 run
-# (rc 124), so the default campaign must fit its budget with margin and
-# self-truncate (skipping sections, never dying mid-print) past this.
-BUDGET_S = float(os.environ.get("BENCH_BUDGET_S", "1200"))
-# 6M docs default (12M behind BENCH_FULL=1): still ~85s/pass at 1 core,
-# far above the ~2-4s fixed per-pass overhead that distorts efficiency
-# below ~1M docs, at half the datagen+leg cost that overflowed round 4.
-N_DOCS = int(os.environ.get("BENCH_N_DOCS", "12000000" if FULL else "6000000"))
-# 1 vs 4 cores: this sandbox's single-socket memory wall inflates JVM
-# cpu-time with thread count (measured, BENCH.md: ~1.3× at 8 threads on
-# the round-4 kernel, ~1.65× at ≥16 on any kernel), so higher-thread
-# topologies measure the box's memory subsystem, not the engine — 2v8
-# recorded 0.754 on a kernel whose plans are unchanged partial-agg/
-# broadcast shapes, while 1v4 records 0.862 on the same binary.  The
-# north rule's actual topology is N vs 4N EXECUTORS (added nodes =
-# added bandwidth), for which the low-thread measurement is the honest
-# local-mode analog; BENCH_SMALL_CORES=2 reproduces the old 2v8 legs.
-SMALL_CORES = int(os.environ.get("BENCH_SMALL_CORES", "1"))
-ALGO = os.environ.get("BENCH_ALGO", "xxh64")
+
+# a leg at or under this many seconds gets one pass; slower legs get two
+SINGLE_PASS_S = 1.0
 
 BENCH_QUERIES = [
     "q1_pricing_summary",
@@ -147,282 +107,11 @@ BENCH_QUERIES = [
     "event_spikes",
 ]
 
-_DOCS_PATH = "/tmp/hashio_spark_bench_docs.parquet"
-_WARMUP_PATH = "/tmp/hashio_spark_bench_docs_warmup.parquet"
-_STAMP = os.path.join(_DOCS_PATH, "_N_DOCS")
-_SHUFFLE_DIR = os.environ.get("BENCH_SHUFFLE_DIR", "/dev/shm/hashio-spark-shuffle")
-os.makedirs(_SHUFFLE_DIR, exist_ok=True)
-# Force the tmpfs shuffle dir through the ENV channel, not just SparkConf:
-# in local mode Utils.getConfiguredLocalDirs prefers $SPARK_LOCAL_DIRS over
-# spark.local.dir, so a driver environment that exports SPARK_LOCAL_DIRS
-# silently reroutes shuffle to the disk-backed default — exactly the
-# anti-scaler BENCH.md measured (r02's 0.601 recorded efficiency vs 0.89
-# with tmpfs at the identical config).  Must happen before any JVM starts.
-os.environ["SPARK_LOCAL_DIRS"] = _SHUFFLE_DIR
-os.environ["SPARK_WORKER_DIR"] = _SHUFFLE_DIR
 
-
-def _assert_tmpfs_shuffle() -> bool:
-    """True iff the live session's block manager actually created its
-    blockmgr-*/spark-* dirs under the tmpfs dir (checked post-warmup)."""
-    import glob
-
-    hits = glob.glob(os.path.join(_SHUFFLE_DIR, "spark-*")) + glob.glob(
-        os.path.join(_SHUFFLE_DIR, "blockmgr-*")
-    )
-    return bool(hits)
-
-
-def _docs_stamped(n_docs: int) -> bool:
-    if os.path.exists(_DOCS_PATH + "/_SUCCESS") and os.path.exists(_STAMP) \
-            and os.path.exists(_WARMUP_PATH + "/_SUCCESS"):
-        with open(_STAMP) as f:
-            return f.read().strip() == str(n_docs)
-    return False
-
-
-def _materialize_docs(n_docs: int) -> None:
-    """One-time: write the deterministic synthetic table to parquet so the
-    measured job validates a table-resident dataset (the north-rule input
-    is an Iceberg table, not a generator expression).  Reused across
-    rounds when the size stamp matches.  A small warmup twin (same schema,
-    same generator, n_docs/12) is written alongside: scaling batches JIT-
-    warm their fresh JVM on it instead of paying a full-table pass, which
-    is what makes the interleaved A/B/A/B batches affordable.  Ends with
-    ``os.sync()`` so ext4 writeback of the fresh table doesn't compete
-    with the first timed batch (measured: the first post-datagen 1-core
-    pass ran 140 s vs 105 s settled in the round-5 shakedown)."""
-    from hashio_spark.datagen import documents_interleaved
-    from hashio_spark.session import get_spark
-
-    if _docs_stamped(n_docs):
-        return
-    spark = get_spark(app="bench-datagen", cores=CPUS)
-    try:
-        docs = documents_interleaved(spark, n_docs=n_docs, n_partitions=128)
-        docs.write.mode("overwrite").parquet(_DOCS_PATH)
-        warm = documents_interleaved(
-            spark, n_docs=max(250_000, n_docs // 12), n_partitions=16
-        )
-        warm.write.mode("overwrite").parquet(_WARMUP_PATH)
-        with open(_STAMP, "w") as f:
-            f.write(str(n_docs))
-    finally:
-        spark.stop()
-    os.sync()
-
-
-def _materialize_docs_isolated(n_docs: int) -> None:
-    """Materialize in a SUBPROCESS: the parent bench process must never
-    own a gateway JVM while scaling batches run — a live parent JVM adds
-    its cpu-time to every batch's all-java cpu probe and its GC/flush
-    threads contend with the measured topology (round-5 shakedown: batch
-    cpu read 150 s vs 114 s with the parent JVM gone, and the inflated
-    cpu blinded the starved-pass detector)."""
-    import subprocess
-
-    if _docs_stamped(n_docs):
-        return
-    cmd = [sys.executable, os.path.abspath(__file__), "--datagen", str(n_docs)]
-    env = dict(os.environ)
-    env["PYTHONPATH"] = os.path.dirname(os.path.abspath(__file__))
-    proc = subprocess.run(cmd, capture_output=True, text=True, env=env)
-    if proc.returncode != 0:
-        raise RuntimeError(f"datagen subprocess failed: {proc.stderr[-500:]}")
-
-
-def _jvm_cpu_seconds() -> float:
-    """Total cpu-time of THIS process's descendant JVMs (driver==executor
-    in local mode) from /proc — used to detect hypervisor-starved passes
-    and to record per-thread cpu inflation.  Restricted to descendants:
-    an all-java scan also counts any other session's JVM on the box (the
-    parent campaign's datagen/catalog gateway survives spark.stop()),
-    which both inflates the recorded cpu-clock and blinds the starved-
-    pass detector (round-5 shakedown: 150 s read vs 114 s true)."""
-    try:
-        import glob
-
-        me = os.getpid()
-        ppid_of: dict[int, int] = {}
-        comm_of: dict[int, str] = {}
-        for stat in glob.glob("/proc/[0-9]*/stat"):
-            try:
-                with open(stat) as f:
-                    parts = f.read().split()
-                pid = int(parts[0])
-                ppid_of[pid] = int(parts[3])
-                comm_of[pid] = parts[1]
-            except (OSError, IndexError, ValueError):
-                continue
-
-        def is_descendant(pid: int) -> bool:
-            seen = 0
-            while pid > 1 and seen < 64:
-                if pid == me:
-                    return True
-                pid = ppid_of.get(pid, 1)
-                seen += 1
-            return False
-
-        total = 0.0
-        clk = os.sysconf("SC_CLK_TCK")
-        for pid, comm in comm_of.items():
-            if "java" not in comm or not is_descendant(pid):
-                continue
-            try:
-                with open(f"/proc/{pid}/stat") as f:
-                    parts = f.read().split()
-                total += (int(parts[13]) + int(parts[14])) / clk
-            except (OSError, IndexError, ValueError):
-                continue
-        return total
-    except Exception:
-        return 0.0
-
-
-def _validation_session(cores: int):
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{cores}]")
-        .appName(f"bench-validate-{cores}")
-        # fixed shuffle partitioning for BOTH legs (a real cluster sizes
-        # shuffle partitions by data, not core count) and small file
-        # splits so the straggler tail stays <5% of the stage
-        .config("spark.sql.shuffle.partitions", "96")
-        .config("spark.sql.adaptive.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.files.maxPartitionBytes", "8m")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.locality.wait", "0")
-        .config("spark.driver.memory", "24g")
-        # memory-backed shuffle dirs: this sandbox's disk-backed /tmp
-        # serializes shuffle I/O through ext4 writeback and inflates JVM
-        # cpu-time ~30% at 8 threads (measured, BENCH.md); real executors
-        # shuffle to per-node local disks/memory, so tmpfs is the honest
-        # local-mode analog (and standard practice on memory-backed
-        # emptyDirs in Spark-on-K8s)
-        .config("spark.local.dir", _SHUFFLE_DIR)
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    return spark
-
-
-def _run_validation_batch(cores: int, n_passes: int, max_retries: int = 8,
-                          algo: str | None = None) -> dict:
-    """One session: warmup + ``n_passes`` timed passes of the flagship
-    validation; a pass that ran starved (wall >> cpu/cores) or that is a
-    gross outlier vs the batch's own best (>1.35×) is retried, bounded.
-    Warmup runs the SAME plan over the small warmup twin table (same
-    schema/generator, ~n/12 rows): it compiles the codegen classes and
-    C2-warms the hot loops at a fraction of a full pass, which is what
-    makes interleaved A/B/A/B batches affordable.  Returns
-    ``{"wall": [...], "cpu": [...]}`` — cpu is this JVM's cpu-clock per
-    pass, recorded so per-thread cpu inflation (the single-socket memory
-    wall, BENCH.md) is data in the artifact, not prose."""
-    from hashio_spark.caching import release
-    from hashio_spark.datagen import asset_catalog
-    from hashio_spark.plans.validate import validate
-
-    spark = _validation_session(cores)
-    try:
-        docs = spark.read.parquet(_DOCS_PATH)
-        cat = asset_catalog(spark, 1000)
-
-        def one(df) -> tuple[float, float]:
-            c0 = _jvm_cpu_seconds()
-            t0 = time.monotonic()
-            res = validate(df, cat, algo=algo or ALGO, persist_violations=False)
-            res.report.collect()
-            release(res.report)
-            return time.monotonic() - t0, _jvm_cpu_seconds() - c0
-
-        if os.path.exists(_WARMUP_PATH + "/_SUCCESS"):
-            # TWO warmup passes: the C2 compile tail runs through the
-            # second (measured on the warmup table in a fresh JVM:
-            # 10.7 → 7.2 → 5.1 s after one warmup pass) — with only one,
-            # the first timed pass reads 1.3-2× inflated and a min-of-2
-            # leg never reaches its settled value
-            warm_df = spark.read.parquet(_WARMUP_PATH)
-            one(warm_df)
-            one(warm_df)
-        else:
-            one(docs)
-        if not _assert_tmpfs_shuffle():
-            # shuffle is NOT in tmpfs → this topology would measure ext4
-            # writeback, not the engine.  Loud, because the recorded
-            # efficiency number depends on it (BENCH.md).
-            print(f"# WARNING: no spark-*/blockmgr-* dirs under {_SHUFFLE_DIR}; "
-                  "shuffle fell back to disk — scaling numbers suspect",
-                  file=sys.stderr)
-        times: list[float] = []
-        cpus: list[float] = []
-        retries = 0
-        while len(times) < n_passes:
-            wall, cpu = one(docs)
-            starved = cpu > 0 and wall > 1.25 * (cpu / cores)
-            outlier = times and wall > 1.35 * min(times)
-            if (starved or outlier) and retries < max_retries:
-                retries += 1
-                why = "starved" if starved else "outlier"
-                print(f"# {why} pass at {cores} cores: wall={wall:.1f}s cpu={cpu:.1f}s — retrying",
-                      file=sys.stderr)
-                continue
-            times.append(wall)
-            cpus.append(cpu)
-        return {"wall": times, "cpu": cpus}
-    finally:
-        spark.stop()
-
-
-def _run_batch_isolated(
-    cores: int, n_passes: int, algo: str | None = None, max_retries: int = 8
-) -> dict:
-    """Run one validation batch in a FRESH subprocess → fresh JVM.
-
-    PySpark keeps one gateway JVM per Python process; ``spark.stop()``
-    ends the SparkContext but not the JVM, so a long query-leg session
-    bequeaths its heap (codegen classes, broadcast remnants) to every
-    later ``SparkSession``.  Measured failure mode: after the ~60-leg
-    catalog pass, 8-core flagship passes ran at 8× the normal JVM
-    cpu-time (full-heap GC thrash at the 24g cap) and tripped the
-    starved-pass detector indefinitely.  A subprocess per batch is also
-    the honest analog of what the north rule measures — each topology
-    gets the fresh executors a real cluster submission would."""
-    import subprocess
-
-    cmd = [
-        sys.executable,
-        os.path.abspath(__file__),
-        "--batch",
-        str(cores),
-        str(n_passes),
-        algo or "-",
-        str(max_retries),
-    ]
-    env = dict(os.environ)
-    env["PYTHONPATH"] = os.path.dirname(os.path.abspath(__file__))
-    proc = subprocess.run(cmd, capture_output=True, text=True, env=env)
-    for ln in proc.stderr.splitlines():
-        if ln.startswith("#"):
-            print(ln, file=sys.stderr)
-    if proc.returncode != 0:
-        raise RuntimeError(
-            f"batch subprocess failed (cores={cores}): {proc.stderr[-500:]}"
-        )
-    return json.loads(proc.stdout.strip().splitlines()[-1])
-
-
-def _fast_tier_queries():
-    """(name, fn) pairs for the xxhash64 production dedupe tier."""
-    from hashio_spark.operators.dedupe import (
-        lsh_candidate_pairs,
-        minhash_signatures,
-        simhash64,
-    )
+def _fast_tier_legs() -> dict:
+    """The xxhash64 production dedupe tier.  Its token hashing has no
+    DuckDB equivalent, so these legs are not REGISTRY queries."""
+    from hashio_spark.operators.dedupe import lsh_candidate_pairs, minhash_signatures, simhash64
 
     def _docs(spark, sf_dir):
         return spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -434,316 +123,43 @@ def _fast_tier_queries():
     def simhash64_fast(spark, sf_dir):
         return simhash64(_docs(spark, sf_dir), "doc_id", "text")
 
-    return [("dedupe_minhash_lsh_fast", minhash_lsh_fast), ("simhash64_fast", simhash64_fast)]
+    return {"dedupe_minhash_lsh_fast": minhash_lsh_fast, "simhash64_fast": simhash64_fast}
 
 
-def _stretch_ref() -> dict | None:
-    """Quote the committed BENCH_FULL=1 stretch campaign (12M docs, same
-    binary and box, this round) with explicit provenance.  The default
-    6M-doc campaign under-reads the 8-core alt leg — the scale-independent
-    per-pass stage overhead (~2-5 s of scheduling/barrier/collect cost
-    across the pass's ~7 stages) is 15-25% of an 8-core wall at 6M docs
-    but <10% at 12M — so the artifact carries the amortized measurement
-    too, clearly labeled as NOT measured in this run."""
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_STRETCH_r05.json")
+def main(names: list[str]) -> None:
+    from hashio_spark.queries import REGISTRY
+    from hashio_spark.session import get_spark
+
+    legs = {q: REGISTRY[q][0] for q in BENCH_QUERIES} | _fast_tier_legs()
+    unknown = [n for n in names if n not in legs]
+    if unknown:
+        raise SystemExit(f"unknown leg(s): {', '.join(unknown)}")
+
+    spark = get_spark(app="bench")
+    qtimes: dict[str, float] = {}
     try:
-        with open(path) as f:
-            last = [ln for ln in f if ln.strip().startswith("{")][-1]
-        d = json.loads(last)
-        keep = (
-            "cores_small", "cores_big", "seconds_small", "seconds_big",
-            "throughput_small_docs_per_sec", "throughput_big_docs_per_sec",
-            "efficiency",
-        )
-        return {
-            "source": "BENCH_STRETCH_r05.json — committed BENCH_FULL=1 campaign "
-                      "(12M docs, same binary+box, this round); NOT measured in this run",
-            "n_docs": d.get("n_docs"),
-            "scaling": {k: d["scaling"][k] for k in keep},
-            "scaling_alt": {k: d["scaling_alt"][k] for k in keep},
-        }
-    except Exception:
-        return None
-
-
-def _scaling_dict(small: int, big: int, b_small: dict, b_big: dict, method: str) -> dict:
-    t_small, t_big = min(b_small["wall"]), min(b_big["wall"])
-    eff = round((t_small / t_big) / (big / small), 3)
-    d: dict = {}
-    if eff > 1.02:
-        # superlinear scaling is physically a poisoned SMALL leg: its min
-        # never escaped a degraded host window while the big leg caught a
-        # clean one (compare cpu_seconds_small across passes).  Say so in
-        # the artifact rather than leaving a >1 efficiency unexplained.
-        d["note"] = (
-            "efficiency > 1 means the small-leg min is inflated by a "
-            "degraded host window (top-up budget ran out before it "
-            "escaped), not that the engine scales superlinearly; "
-            "scaling_at_12m_ref carries a clean-window measurement"
-        )
-    return d | {
-        "executors_small": f"local[{small}]",
-        "executors_big": f"local[{big}]",
-        "cores_small": small,
-        "cores_big": big,
-        "seconds_small": round(t_small, 3),
-        "seconds_big": round(t_big, 3),
-        "samples_small": [round(x, 2) for x in b_small["wall"]],
-        "samples_big": [round(x, 2) for x in b_big["wall"]],
-        # JVM cpu-clock per pass: on this single-socket box, cpu-time
-        # inflation with thread count (flat ≤4 threads, ~1.3× at 8) is the
-        # memory-wall evidence behind the 1v4 primary topology — recorded
-        # here so the defense lives in the driver artifact (ADVICE r4 #1)
-        "cpu_seconds_small": [round(x, 2) for x in b_small["cpu"]],
-        "cpu_seconds_big": [round(x, 2) for x in b_big["cpu"]],
-        "throughput_small_docs_per_sec": round(N_DOCS / t_small, 1),
-        "throughput_big_docs_per_sec": round(N_DOCS / t_big, 1),
-        "efficiency": eff,
-        "method": method,
-    }
-
-
-def main() -> None:
-    t_start = time.monotonic()
-    out: dict = {
-        "sf": SF_DIR,
-        "unit": "sec",
-        "metric": "docs/sec validated (full stats+constraint+digest pass)",
-        "value": 0.0,
-        "queries": {},
-        "n_docs": N_DOCS,
-    }
-    _ref = _stretch_ref()
-    if _ref:
-        out["scaling_at_12m_ref"] = _ref
-
-    def emit() -> None:
-        """Print the COMPLETE result-so-far as one JSON line (the driver
-        parses the LAST line, so each section's emit makes everything
-        measured up to that point kill-proof)."""
-        out["elapsed_s"] = round(time.monotonic() - t_start, 1)
-        print(json.dumps(out), flush=True)
-
-    def budget_left() -> float:
-        return BUDGET_S - (time.monotonic() - t_start)
-
-    # -- Section 1: flagship + primary scaling (N vs 4N cores) -------------
-    # First because the north rule's binding criterion is the scaling
-    # efficiency — if anything gets cut by the driver's wall budget, it
-    # must be the later sections.  Interleaved A/B/A/B fresh-JVM batches
-    # (2 timed passes per topology + adaptive top-ups, min across batches):
-    # a noisy
-    # hypervisor window poisons at most ONE batch of a topology, never the
-    # whole leg — the round-5 shakedown's single-batch 4-core leg read
-    # 35.9 s in-campaign vs 30.2 s clean, turning a true 0.85 efficiency
-    # into a recorded 0.73.  Cheap warmups (see _run_validation_batch)
-    # keep the 4-batch interleave cheaper than round 4's 2-batch design.
-    # Datagen runs in a subprocess so the parent owns no JVM here.
-    _materialize_docs_isolated(N_DOCS)
-    small, big = SMALL_CORES, SMALL_CORES * 4
-    _METHOD = (
-        "N vs 4N cores, interleaved A/B/A/B fresh-JVM batches (2 timed passes "
-        "per topology + adaptive symmetric top-ups while outside [0.86, 1.02], "
-        "min across batches), double same-plan warmup per JVM, "
-        "starved/outlier-pass retry via JVM cpu-clock, tmpfs shuffle via env "
-        "(see BENCH.md)"
-    )
-
-    def _emit_primary(b_small: dict, b_big: dict) -> None:
-        t_big = min(b_big["wall"])
-        out["flagship"] = {
-            "n_docs": N_DOCS,
-            "executors": f"local[{big}]",
-            "cores": big,
-            "seconds": round(t_big, 3),
-            "docs_per_sec": round(N_DOCS / t_big, 1),
-            "algo": ALGO,
-        }
-        out["scaling"] = _scaling_dict(small, big, b_small, b_big, _METHOD)
-        out["value"] = round(t_big, 3)
-        emit()
-
-    b_small = _run_batch_isolated(small, 2)
-    b_big = _run_batch_isolated(big, 2)
-    # provisional emit the moment a full topology pair exists: if the
-    # driver's kill lands during the top-up batches, the binding number is
-    # already on record (round-5 lesson — the single end-of-section emit
-    # landed at 585 s, past a plausible driver budget)
-    _emit_primary(b_small, b_big)
-
-    # -- Section 1b: primary top-up passes (robustness of the min) ----------
-    # Adaptive: each round adds ONE fresh-JVM pass to BOTH primary legs (a
-    # later, independent hypervisor window), and more rounds run only while
-    # the efficiency still reads below 0.86 and the budget allows.  min() is
-    # a consistent estimator of the true leg time, so extra samples only
-    # tighten it; topping up BOTH legs every round keeps the procedure
-    # symmetric (never "re-run just the big leg until the number passes").
-    # Runs BEFORE the alt pair: when the primary pair reads clean the band
-    # check makes this a no-op, and when it reads dirty its rescue is the
-    # BINDING number — the second round-5 shakedown lost exactly this
-    # rescue because alt-leg starved retries (an oversubscribed window
-    # burning 313 s) drained the budget first and a degraded 0.75 stood.
-    # Round-5 validation saw the rescue work: two 4-core passes in a noisy
-    # window read 0.688; one extra pass in a later window read 25.4 s →
-    # 0.837.
-    def _primary_eff() -> float:
-        return (min(b_small["wall"]) / min(b_big["wall"])) / (big // small)
-
-    for _round in range(3):
-        # skip entirely when the pair already reads in the sane band:
-        # [0.86, 1.02].  Below it the min hasn't escaped a noisy window;
-        # above it the SMALL leg is suspect (superlinear scaling means a
-        # poisoned 1-core min, which must be challenged, not kept).
-        eff = _primary_eff()
-        if 0.86 <= eff <= 1.02:
-            break
-        ran = False
-        for cores, acc in ((small, b_small), (big, b_big)):
-            if budget_left() > min(acc["wall"]) * 1.6 + 30 + 180:
-                bt = _run_batch_isolated(cores, 1)
-                acc["wall"] += bt["wall"]
-                acc["cpu"] += bt["cpu"]
-                ran = True
-        _emit_primary(b_small, b_big)
-        if not ran:
-            break
-
-    # -- Section 2: alternate scaling topology (2N vs 8N cores) -------------
-    # ADVICE r4 #1: record BOTH topologies in the artifact.  The 2v8 pair
-    # sits on this box's memory wall (see _scaling_dict cpu-clock note);
-    # it is reported as scaling_alt, with the cpu-clocks that show why.
-    # Priority order: primary pair > primary top-up passes (the binding
-    # number's rescue) > alt pair > alt top-up > catalog.  Alt batches cap
-    # starved-pass retries at 3 — on an oversubscribed window every retry
-    # costs a full pass and the alt pair is the non-binding record.  The
-    # cost estimate derives from the measured 1-core wall (a 2-core pass
-    # ≈ t1/2, an 8-core pass ≈ t1/6 on this box's memory wall), not a
-    # flat fudge; the reserve (180 s) matches the measured 73-leg catalog
-    # (~140 s).
-    alt_small, alt_big = SMALL_CORES * 2, SMALL_CORES * 8
-    _ALT_METHOD = (
-        "2N vs 8N cores (memory-wall topology — see cpu_seconds_* inflation), "
-        "fresh-JVM batches, double warmup + min-of-all, adaptive symmetric "
-        "top-up below 0.8; at the default 6M-doc scale the fixed per-pass "
-        "stage overhead is 15-25% of the 8-core wall — scaling_at_12m_ref "
-        "carries the amortized 12M measurement"
-    )
-    b_alt_small: dict | None = None
-    b_alt_big: dict | None = None
-
-    def _emit_alt() -> None:
-        out["scaling_alt"] = _scaling_dict(
-            alt_small, alt_big, b_alt_small, b_alt_big, _ALT_METHOD
-        )
-        emit()
-
-    t1 = min(b_small["wall"])
-    est_alt = (t1 / 2) * 2.6 + (t1 / 6) * 2.6 + 60
-    if budget_left() > est_alt + 180:
-        b_alt_small = _run_batch_isolated(alt_small, 2, max_retries=3)
-        b_alt_big = _run_batch_isolated(alt_big, 2, max_retries=3)
-        _emit_alt()
-    else:
-        print("# budget: skipping alt-topology section", file=sys.stderr)
-
-    # -- Section 2c: alt top-up passes ---------------------------------------
-    # Same symmetric adaptive rule as the primary legs (never "re-run just
-    # the big leg until the number passes"): the 8-core fresh JVM has the
-    # longest JIT tail and the shortest passes, so one noisy window
-    # otherwise owns a min-of-2 alt leg for good — the round-5 default
-    # campaign recorded 2v8 at 0.449 off passes whose JVM cpu-clock read
-    # 467/190 s vs ~150 s settled.  Runs after the primary top-ups: the
-    # binding number's rescue outranks the alt pair's refinement.
-    # ONE round only: a min-of-3 alt leg rarely moves in a fourth window,
-    # and the 0.79x readings this chases are the documented 6M-scale
-    # fixed-overhead artifact (scaling_at_12m_ref carries the amortized
-    # 0.867) — the round-5 shakedown burned ~300 s of catalog budget
-    # nudging 0.796 and gained nothing.
-    if b_alt_small is not None:
-        for _round in range(1):
-            if out["scaling_alt"]["efficiency"] >= 0.8:
-                break
-            ran = False
-            for cores, acc in ((alt_small, b_alt_small), (alt_big, b_alt_big)):
-                if budget_left() > min(acc["wall"]) * 1.6 + 30 + 180:
-                    bt = _run_batch_isolated(cores, 1, max_retries=3)
-                    acc["wall"] += bt["wall"]
-                    acc["cpu"] += bt["cpu"]
-                    ran = True
-            _emit_alt()
-            if not ran:
-                break
-
-    # -- Section 3: catalog queries at SF_DIR -------------------------------
-    # entry gate 120 s, not a full-catalog reserve: the loop truncates at
-    # <60 s left and emits every 10 legs, so a partial catalog is recorded
-    # over none (the round-5 shakedown missed the former 240 s gate by
-    # ONE second and lost the whole section)
-    if budget_left() > 120:
-        from hashio_spark.queries import REGISTRY
-        from hashio_spark.session import get_spark
-
-        qtimes: dict[str, float] = {}
-        spark = get_spark(app="bench", cores=CPUS)
-
-        def timed(name, fn):
-            # Fresh plan per pass AND a cleared cache — queries that
-            # persist() internally (the LSH family) would otherwise have a
-            # second pass served from the CacheManager.  Queries ≤1s get a
-            # single pass (noise there is noise-scale); >1s get min-of-2
-            # to absorb one hypervisor window (r4's full min-of-2 catalog
-            # was a big slice of the budget overflow).
+        for name in names or legs:
             best, n = None, 0
-            for i in range(2):
+            for _ in range(2):
                 spark.catalog.clearCache()
                 t0 = time.monotonic()
-                n = fn(spark, SF_DIR).count()
+                n = legs[name](spark, SF_DIR).count()
                 dt = time.monotonic() - t0
-                best = dt if best is None or dt < best else best
-                if best <= 1.0 or budget_left() < 120:
+                best = dt if best is None else min(best, dt)
+                if best <= SINGLE_PASS_S:
                     break
             qtimes[name] = round(best, 3)
             print(f"# {name}: {qtimes[name]}s rows={n}", file=sys.stderr)
-
-        out["queries"] = qtimes  # live reference — emits below see every leg
-        for i, name in enumerate(BENCH_QUERIES):
-            if budget_left() < 60:
-                print("# budget: catalog truncated", file=sys.stderr)
-                break
-            fn, _sql = REGISTRY[name]
-            timed(name, fn)
-            if (i + 1) % 10 == 0:
-                emit()  # kill-proof the finished legs every 10 queries
-        # production fast-tier variants (xxhash64 token hashing — not
-        # DuckDB-replicable, so not REGISTRY queries; benched to record
-        # the native tier's headroom over the oracle-parity md5 variants)
-        for name, fn in _fast_tier_queries():
-            if budget_left() < 60:
-                break
-            timed(name, fn)
+    finally:
         spark.stop()
-        out["queries"] = qtimes
-        out["value"] = round(sum(qtimes.values()) + min(b_big["wall"]), 3)
-        emit()
-    else:
-        print("# budget: skipping catalog section", file=sys.stderr)
-
-    # -- Section 4: native-xxhash64 fast tier (BENCH_FULL only) -------------
-    if FULL and budget_left() > min(b_big["wall"]) * 3 * 1.3 + 30:
-        b_fast = _run_batch_isolated(big, 2, algo="fast")
-        t_fast = min(b_fast["wall"])
-        out["flagship"]["fast_seconds"] = round(t_fast, 3)
-        out["flagship"]["fast_docs_per_sec"] = round(N_DOCS / t_fast, 1)
-        emit()
+    print(json.dumps({
+        "metric": "catalog wall time, sum of legs",
+        "value": round(sum(qtimes.values()), 3),
+        "unit": "sec",
+        "sf": SF_DIR,
+        "queries": qtimes,
+    }))
 
 
 if __name__ == "__main__":
-    if len(sys.argv) > 1 and sys.argv[1] == "--batch":
-        _cores, _n = int(sys.argv[2]), int(sys.argv[3])
-        _algo = sys.argv[4] if len(sys.argv) > 4 and sys.argv[4] != "-" else None
-        _mr = int(sys.argv[5]) if len(sys.argv) > 5 else 8
-        print(json.dumps(_run_validation_batch(_cores, _n, max_retries=_mr, algo=_algo)))
-    elif len(sys.argv) > 1 and sys.argv[1] == "--datagen":
-        _materialize_docs(int(sys.argv[2]))
-    else:
-        main()
+    main(sys.argv[1:])

@@ -32,7 +32,7 @@ A handle may itself carry handles (a query that returns a projection of
 ``res.report`` tracks ``res.report``); ``release`` follows them.
 ``release`` is a no-op on DataFrames without handles, so callers may apply
 it unconditionally.  ``spark.catalog.clearCache()`` remains the blunt
-fallback (bench.py uses it between unrelated queries).
+fallback (bench.py runs it before every timed pass).
 """
 
 from __future__ import annotations

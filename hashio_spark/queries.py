@@ -65,9 +65,9 @@ _TABLE_CACHE: dict[tuple[int, str, str], DataFrame] = {}
 #     lineitem/orders/events cost +0.2-0.7 s per leg
 #     (latest_event_per_user 0.98 → 0.24 s WITHOUT the fan-out), while
 #     fanning documents/embeddings saves multiple seconds per leg.
-_FANOUT_MAX_BYTES = int(os.environ.get("SPARK_GRAFT_FANOUT_MAX_BYTES", str(64 * 1024 * 1024)))
-_FANOUT_MIN_BYTES = int(os.environ.get("SPARK_GRAFT_FANOUT_MIN_BYTES", str(4 * 1024 * 1024)))
-_FANOUT_MIN_ROW_BYTES = int(os.environ.get("SPARK_GRAFT_FANOUT_MIN_ROW_BYTES", "64"))
+_FANOUT_MAX_BYTES = 64 * 1024 * 1024
+_FANOUT_MIN_BYTES = 4 * 1024 * 1024
+_FANOUT_MIN_ROW_BYTES = 64
 
 
 def _table_rows(path: str) -> int:
@@ -1401,7 +1401,7 @@ def validate_interleaved(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Report-only: the five-column projection lets Catalyst prune the
     # unreferenced report aggregates (string min/max, quality histogram),
     # and persist_violations=False — the violations feed only the count.
-    # The bench scaling legs run the FULL pass — see bench.py.
+    # perfbench's validate_cli workload runs the full pass.
     res = validate(docs, cat, algo="md5", group_digest="composite", persist_violations=False)
     out = res.report.select(
         "partition_id",

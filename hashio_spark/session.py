@@ -19,6 +19,15 @@ from pyspark.sql import SparkSession
 # is unset
 _DRIVER_MEMORY_SHARE = 0.5
 
+# Scan split ceiling, spark.sql.files.maxPartitionBytes (guide §6).  The
+# sample data is single-file parquet whose row groups cap scan parallelism
+# anyway (≤6 row groups at sf1.0), so 16m only un-glues the 128m default's
+# 1-2-task scans of the mid-size tables.  A deployment with many large
+# files raises it to 128m-1g (guide §6 recommends larger splits for big
+# sequential scans) through ``get_spark(extra_conf=...)`` or
+# ``spark.conf.set``.
+_MAX_PARTITION_BYTES = "16m"
+
 
 def host_cores() -> int:
     """``$SPARK_GRAFT_CPUS`` if set, else the host's CPU count."""
@@ -47,20 +56,11 @@ def get_spark(
         cores = host_cores()
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
-    # Scan split size (guide §6): the sandbox testdata is single-file
-    # parquet whose row groups cap scan parallelism anyway (≤6 row groups
-    # at sf1.0), so a 16m split ceiling only un-glues the 128m default's
-    # 1-2-task scans of the mid-size tables; on a production deployment
-    # with many large files set SPARK_GRAFT_MAX_PARTITION_BYTES back to
-    # 128m-1g (guide §6 recommends larger splits for big sequential
-    # scans).  bench.py's own flagship session pins 8m for the same
-    # reason.
-    max_part_bytes = os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m")
     b = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.files.maxPartitionBytes", max_part_bytes)
+        .config("spark.sql.files.maxPartitionBytes", _MAX_PARTITION_BYTES)
         .config("spark.default.parallelism", str(cores))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -5,7 +5,7 @@ from hashio_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app="hashio-spark-tests", cores=8, shuffle_partitions=8)
+    s = get_spark(app="hashio-spark-tests", shuffle_partitions=8)
     yield s
     s.stop()
 

@@ -111,7 +111,7 @@ def test_crosscorpus_neardup_broadcast_shape(spark, build):
     for pat in (r"BroadcastHashJoin", r"HashAggregate"):
         assert re.search(pat, plan), f"missing /{pat}/"
     for pat in (r"SortMergeJoin", r"BatchEvalPython", r"CartesianProduct",
-                r"SortAggregate", r"Exchange SinglePartition"):
+                r"SortAggregate", r"Arguments: SinglePartition"):
         assert not re.search(pat, plan), f"forbidden /{pat}/ present"
 
 

@@ -5,10 +5,11 @@ the registry grew past the gate's wall budget and nobody noticed until the
 verdict.  This test runs the ENTIRE local gate replica under a budget so
 CI catches that drift first (r4 VERDICT next-round #6).
 
-Budget calibration: the local replica measured ~111s for 86 queries
-(Spark local[8] + DuckDB, 2026-08-18); 240s gives >2x margin for machine
-noise while still tripping if per-query cost or registry size grows past
-what a driver-sized budget absorbed in round 4.
+Budget calibration: the local replica, at the host's core count
+(``get_spark`` default), measured ~85s for 86 queries on 4 vCPUs (Spark
+local[4] + DuckDB) and ~111s at local[8] before; 240s gives >2x margin
+for machine noise while still tripping if per-query cost or registry size
+grows past what round 4's wall-bounded gate absorbed.
 """
 
 import os

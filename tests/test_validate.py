@@ -94,13 +94,50 @@ def test_report_projection_prunes_unreferenced_aggregates(docs, catalog, result)
     release(res.report)
 
 
+def _plan_children(node) -> list:
+    """Children of a JVM physical-plan node, looking through adaptive
+    wrappers and query stages; a cached-relation scan is a leaf (its rows
+    are whatever the cached frame holds)."""
+    cls = node.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        return [node.executedPlan()]
+    if cls.endswith("QueryStageExec"):
+        return [node.plan()]
+    if cls == "ReusedExchangeExec":
+        return [node.child()]
+    if cls == "InMemoryTableScanExec":
+        return []
+    kids = node.children()
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def wide_sort_aggregates(plan) -> list[str]:
+    """SortAggregate nodes whose subtree reads ``spans`` from a file scan,
+    i.e. that sort rows carrying the spans payload."""
+
+    def reads_spans(node) -> bool:
+        if node.getClass().getSimpleName() == "FileSourceScanExec":
+            out = node.output()
+            return any(out.apply(i).name() == "spans" for i in range(out.size()))
+        return any(reads_spans(k) for k in _plan_children(node))
+
+    found: list[str] = []
+
+    def walk(node) -> None:
+        if node.getClass().getSimpleName() == "SortAggregateExec" and reads_spans(node):
+            found.append(node.simpleString(25)[:160])
+        for k in _plan_children(node):
+            walk(k)
+
+    walk(plan)
+    return found
+
+
 def test_report_sorts_no_spans_width_rows(spark, tmp_path):
     """The report's one aggregation is a SortAggregate (string min/max)
-    over the cached per-doc frame; the plan-audit detector finds no
-    SortAggregate fed by the spans file scan there, and still flags that
-    old shape when it is built by hand."""
-    from tools.plan_audit import wide_sort_aggregates
-
+    over the cached per-doc frame; the detector finds no SortAggregate
+    fed by the spans file scan there, and still flags that old shape
+    when it is built by hand."""
     from hashio_spark.caching import release
     from hashio_spark.datagen import asset_catalog, documents_interleaved
 

@@ -52,7 +52,7 @@ def main(names, budget: float | None = None):
     from hashio_spark.session import get_spark
 
     t_start = time.monotonic()
-    spark = get_spark(cores=8, app="oracle-check")
+    spark = get_spark(app="oracle-check")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')")
