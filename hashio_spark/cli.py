@@ -23,10 +23,9 @@ from pyspark.sql import functions as F
 
 
 def _spark(args) -> SparkSession:
-    b = SparkSession.builder.appName("hashio-spark")
-    if args.master:
-        b = b.master(args.master)
-    return b.getOrCreate()
+    from hashio_spark.session import get_spark
+
+    return get_spark(master=args.master)
 
 
 def cmd_validate(args) -> int:
@@ -113,8 +112,8 @@ def cmd_validate(args) -> int:
         return 2
     # one read of the corpus: validate() persists its per-doc frame; the
     # violations (persisted only when written) and the report derive from
-    # it, and the report is materialized ONCE — merge, export and the
-    # summary line all read that copy
+    # it, and the report is materialized ONCE — the merge reads that copy,
+    # the export and the summary line the rows collected from it
     res = validate(docs, catalog, algo=algo, parity=args.parity, checks=checks,
                    extra_algos=extra_algos, with_sketches=args.sketches,
                    persist_violations=bool(args.violations_out))
@@ -125,11 +124,11 @@ def cmd_validate(args) -> int:
         rows = report.collect()
         if store is not None:
             store.merge(manifest_rows(res, args.run_id, algo, lineage=",".join(inputs),
-                                      extra_algos=extra_algos))
+                                      extra_algos=extra_algos), run_ids=[args.run_id])
         if args.export:
             from hashio_spark.sources.exporters import EXPORTERS
 
-            EXPORTERS.write(report, args.export, "partition_id", algo)
+            EXPORTERS.write(rows, args.export, "partition_id", algo)
     finally:
         report.unpersist()
         res.violations.unpersist()

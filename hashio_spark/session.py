@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 
@@ -46,32 +47,62 @@ def host_driver_memory() -> str:
     return f"{max(1, int(total * _DRIVER_MEMORY_SHARE) >> 30)}g"
 
 
+def _launcher_conf() -> SparkConf | None:
+    """The conf spark-submit gave this driver's JVM — its ``--master``,
+    ``--conf`` and ``spark-defaults.conf`` values — when spark-submit
+    launched the driver (it then passes ``PYSPARK_GATEWAY_PORT``).  A
+    plain ``python`` driver has none: its JVM starts later, from the
+    builder's conf."""
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return None
+    SparkContext._ensure_initialized()
+    return SparkConf()  # loads the running JVM's spark.* properties
+
+
 def get_spark(
     app: str = "hashio-spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
+    master: str | None = None,
 ) -> SparkSession:
+    """The session factory of the library, the CLI, the tests and the
+    benchmarks.
+
+    A session that already runs in this process is returned as it is:
+    whoever started it chose its master and conf.  A new session gets the
+    tuned config above.  Its master is ``master`` if given (the CLI's
+    ``--master``), else the one spark-submit set, else ``local[cores]``.
+    Settings from spark-submit also win over the tuned defaults;
+    ``extra_conf`` wins over both."""
+    if SparkContext._active_spark_context is not None:
+        return SparkSession.builder.getOrCreate()
     if cores is None:
         cores = host_cores()
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
-    b = (
-        SparkSession.builder.master(f"local[{cores}]")
-        .appName(app)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.files.maxPartitionBytes", _MAX_PARTITION_BYTES)
-        .config("spark.default.parallelism", str(cores))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", host_driver_memory())
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-    )
-    for k, v in (extra_conf or {}).items():
+    conf = {
+        "spark.master": f"local[{cores}]",
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.files.maxPartitionBytes": _MAX_PARTITION_BYTES,
+        "spark.default.parallelism": str(cores),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.driver.memory": host_driver_memory(),
+        "spark.ui.enabled": "false",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    }
+    launcher = _launcher_conf()
+    if launcher is not None:
+        conf = {k: v for k, v in conf.items() if not launcher.contains(k)}
+    if master:
+        conf["spark.master"] = master
+    conf.update(extra_conf or {})
+    b = SparkSession.builder.appName(app)
+    for k, v in conf.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

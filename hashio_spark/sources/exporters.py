@@ -6,63 +6,115 @@
   close-time fixup stripping the trailing ``,\\n`` and writing ``\\n}``.
 * :func:`write_txt` — ``TXTExporter`` (``exporter.py:306-364``):
   ``"<hash> <path>"`` lines.
-* :func:`read_hash_json` / :func:`read_txt` — the matching readers.
+* :func:`write_mhl` — ``MHLExporter`` (``exporter.py:184-303``).
+* :func:`read_hash_json` / :func:`read_txt` / :func:`read_mhl` — the
+  matching readers.
+
+Each format has ONE formatter (``hash_json_text``, ``txt_text``,
+``mhl_text``) over ``(key, digest, ...)`` tuples sorted by the key's
+string form (:func:`sorted_entries`).  A writer takes either a DataFrame,
+which it collects, or rows the caller already collected — the CLI hands
+over the report rows it read for its summary line, so an export runs no
+Spark job.
 
 Scale note: these sinks exist for interoperability with the reference's
 manifest files (small, per-partition or per-run).  They collect to the
 driver deliberately — a 10^12-row manifest lives in the Iceberg manifest
 table (``manifest_store``), not in a JSON file; the distributed path for
-bulk output is ``df.write.json/parquet``.  ``to_manifest_rows`` is the
-distributed formatter used by both.
+bulk output is ``df.write.json/parquet`` (:func:`txt_lines_df`).
 """
 
 from __future__ import annotations
 
 import json
+from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
+Rows = DataFrame | Sequence[Row]
 
-def to_manifest_entries(df: DataFrame, key_col: str, algo: str, digest_col: str = "digest",
-                        meta_cols: tuple[str, ...] = ()) -> list[tuple[str, dict]]:
-    """Collect (key, entry-dict) pairs in deterministic key order.  The
-    entry layout mirrors the reference manifest entry
-    (``/root/reference/lib/hashio/exporter.py:111-133``): metadata fields
-    plus one ``<algo>: <hexdigest>`` field."""
-    cols = [F.col(key_col).cast("string").alias("_k"), F.col(digest_col).alias("_d")]
-    cols += [F.col(c) for c in meta_cols]
-    rows = df.select(*cols).orderBy("_k").collect()
-    out = []
-    for r in rows:
-        entry = {c: r[c] for c in meta_cols}
-        entry[algo] = r["_d"]
-        out.append((r["_k"], entry))
+
+def sorted_entries(data: Rows, key_col: str, digest_col: str = "digest",
+                   extra_cols: tuple[str, ...] = ()) -> list[tuple]:
+    """``(key, digest, *extras)`` per row, sorted by the key's string form.
+
+    A DataFrame is collected here with its key cast to string by Spark;
+    collected rows get ``str(key)``, which is the same string for the
+    string and integral keys manifests use.  Python orders ``str`` by
+    code point, the order Spark's UTF-8 byte comparison gives, so both
+    inputs sort alike (``"10" < "2"``); null keys sort first, as in
+    Spark's ascending order."""
+    if isinstance(data, DataFrame):
+        data = data.select(F.col(key_col).cast("string").alias(key_col), digest_col,
+                           *extra_cols).collect()
+    out = [
+        (None if r[key_col] is None else str(r[key_col]), r[digest_col], *(r[c] for c in extra_cols))
+        for r in data
+    ]
+    out.sort(key=lambda e: (e[0] is not None, e[0] or ""))
     return out
 
 
-def write_hash_json(df: DataFrame, path: str, key_col: str, algo: str,
+def hash_json_text(entries: list[tuple], algo: str, meta_cols: tuple[str, ...] = ()) -> str:
+    """HASH.json text of :func:`sorted_entries` output.  An entry mirrors
+    the reference manifest entry (``exporter.py:111-133``): the metadata
+    fields, then one ``<algo>: <hexdigest>`` field."""
+    if not entries:
+        # the reference's trailing-comma fixup would truncate the "{\n"
+        # header and leave invalid JSON for an empty manifest
+        return "{\n}"
+    body = "".join(
+        '    "{0}": {1},\n'.format(k, json.dumps({**dict(zip(meta_cols, meta)), algo: d}, indent=8))
+        for k, d, *meta in entries
+    )
+    # close-time fixup (exporter.py:82-95): strip trailing ",\n", add "\n}"
+    return "{\n" + body[:-2] + "\n}"
+
+
+def txt_text(entries: list[tuple]) -> str:
+    """``"<hash> <path>"`` lines (TXTExporter.write, exporter.py:351-364)."""
+    return "".join(f"{d} {k}\n" for k, d, *_ in entries)
+
+
+def mhl_text(entries: list[tuple], algo: str = "md5", with_size: bool = False,
+             with_mtime: bool = False, hashdate: int = 0) -> str:
+    """MHL 1.1 hashlist text: one ``<hash>`` element per
+    ``(key, digest[, size][, mtime])`` entry."""
+    import xml.etree.ElementTree as ET
+    from datetime import datetime, timezone
+
+    def ts(v: float) -> str:
+        return datetime.fromtimestamp(int(v), tz=timezone.utc).strftime("%Y-%m-%dT%H:%M:%SZ")
+
+    out = ['<?xml version="1.0" encoding="UTF-8"?>\n<hashlist version="1.1">\n']
+    for k, d, *extra in entries:
+        size = extra.pop(0) if with_size else None
+        mtime = extra.pop(0) if with_mtime else None
+        h = ET.Element("hash")
+        if with_mtime:
+            ET.SubElement(h, "lastmodificationdate").text = ts(mtime)
+        if with_size:
+            ET.SubElement(h, "size").text = str(size)
+        ET.SubElement(h, algo).text = d
+        ET.SubElement(h, "hashdate").text = ts(hashdate)
+        ET.SubElement(h, "file").text = k
+        ET.indent(h, space="  ")
+        out.append(ET.tostring(h, encoding="unicode") + "\n")
+    out.append("</hashlist>\n")
+    return "".join(out)
+
+
+def _write(path: str, text: str) -> None:
+    with open(path, "w") as f:
+        f.write(text)
+
+
+def write_hash_json(df: Rows, path: str, key_col: str, algo: str,
                     digest_col: str = "digest", meta_cols: tuple[str, ...] = ()) -> None:
     """Write a reference-byte-compatible HASH.json manifest."""
-    entries = to_manifest_entries(df, key_col, algo, digest_col, meta_cols)
-    if not entries:
-        # the trailing-comma fixup below would otherwise truncate the
-        # "{\n" header and leave invalid JSON for an empty manifest
-        with open(path, "w") as f:
-            f.write("{\n}")
-        return
-    with open(path, "w") as f:
-        f.write("{\n")
-        for k, entry in entries:
-            f.write('    "{0}": {1},\n'.format(k, json.dumps(entry, indent=8)))
-    # close-time fixup (exporter.py:82-95): strip trailing ",\n", write "\n}"
-    with open(path, "rb+") as f:
-        import os
-
-        f.seek(-2, os.SEEK_END)
-        f.truncate()
-    with open(path, "a+") as f:
-        f.write("\n}")
+    entries = sorted_entries(df, key_col, digest_col, meta_cols)
+    _write(path, hash_json_text(entries, algo, meta_cols))
 
 
 def read_hash_json(path: str) -> dict:
@@ -70,12 +122,9 @@ def read_hash_json(path: str) -> dict:
         return json.load(fp)
 
 
-def write_txt(df: DataFrame, path: str, key_col: str, digest_col: str = "digest") -> None:
+def write_txt(df: Rows, path: str, key_col: str, digest_col: str = "digest") -> None:
     """``"<hash> <path>"`` flat lines (TXTExporter.write, exporter.py:351-364)."""
-    rows = df.select(F.col(digest_col).alias("_d"), F.col(key_col).cast("string").alias("_k")).orderBy("_k").collect()
-    with open(path, "w") as f:
-        for r in rows:
-            f.write(f"{r['_d']} {r['_k']}\n")
+    _write(path, txt_text(sorted_entries(df, key_col, digest_col)))
 
 
 def read_txt(path: str, algo: str) -> dict:
@@ -91,7 +140,7 @@ def read_txt(path: str, algo: str) -> dict:
 
 
 def write_mhl(
-    df: DataFrame, path: str, key_col: str, digest_col: str = "digest",
+    df: Rows, path: str, key_col: str, digest_col: str = "digest",
     algo: str = "md5", size_col: str | None = None, mtime_col: str | None = None,
     hashdate: int = 0,
 ) -> None:
@@ -102,32 +151,9 @@ def write_mhl(
     ``lastmodificationdate``.  stdlib ``xml.etree`` (lxml not required);
     ``hashdate`` is caller-supplied for determinism (the reference stamps
     now())."""
-    import xml.etree.ElementTree as ET
-    from datetime import datetime, timezone
-
-    def ts(v: float) -> str:
-        return datetime.fromtimestamp(int(v), tz=timezone.utc).strftime("%Y-%m-%dT%H:%M:%SZ")
-
-    cols = [F.col(key_col).cast("string").alias("_k"), F.col(digest_col).alias("_d")]
-    if size_col:
-        cols.append(F.col(size_col).alias("_s"))
-    if mtime_col:
-        cols.append(F.col(mtime_col).alias("_m"))
-    rows = df.select(*cols).orderBy("_k").collect()
-    with open(path, "w") as f:
-        f.write('<?xml version="1.0" encoding="UTF-8"?>\n<hashlist version="1.1">\n')
-        for r in rows:
-            h = ET.Element("hash")
-            if mtime_col:
-                ET.SubElement(h, "lastmodificationdate").text = ts(r["_m"])
-            if size_col:
-                ET.SubElement(h, "size").text = str(r["_s"])
-            ET.SubElement(h, algo).text = r["_d"]
-            ET.SubElement(h, "hashdate").text = ts(hashdate)
-            ET.SubElement(h, "file").text = r["_k"]
-            ET.indent(h, space="  ")
-            f.write(ET.tostring(h, encoding="unicode") + "\n")
-        f.write("</hashlist>\n")
+    extra = tuple(c for c in (size_col, mtime_col) if c)
+    entries = sorted_entries(df, key_col, digest_col, extra)
+    _write(path, mhl_text(entries, algo, size_col is not None, mtime_col is not None, hashdate))
 
 
 def read_mhl(path: str, algo: str = "md5") -> dict:
@@ -163,7 +189,8 @@ def txt_lines_df(df: DataFrame, key_col: str, digest_col: str = "digest") -> Dat
 class ExporterRegistry:
     """Extension → (writer, reader) dispatch.
 
-    ``writer(df, path, key_col, algo, digest_col)`` and
+    ``writer(df, path, key_col, algo, digest_col)`` (``df`` a DataFrame
+    or already collected rows) and
     ``reader(path, algo) -> dict``; registered like encoders so callers
     resolve a sink from the output filename alone."""
 
@@ -179,7 +206,7 @@ class ExporterRegistry:
             raise ValueError(f"no exporter registered for extension: .{ext or '<none>'}")
         return self._by_ext[ext]
 
-    def write(self, df: DataFrame, path: str, key_col: str, algo: str = "md5",
+    def write(self, df: Rows, path: str, key_col: str, algo: str = "md5",
               digest_col: str = "digest") -> None:
         writer, _ = self.for_path(path)
         writer(df, path, key_col, algo, digest_col)

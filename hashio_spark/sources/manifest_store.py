@@ -31,6 +31,8 @@ only unfinished partitions and re-running a finished run is a no-op.
 from __future__ import annotations
 
 import re
+import uuid
+from collections.abc import Iterable
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
@@ -51,6 +53,11 @@ MANIFEST_SCHEMA = T.StructType(
         T.StructField("updated_at", T.TimestampType(), True),
     ]
 )
+
+
+def _run_id(dir_name: str) -> str:
+    """The run_id of a ``run_id=<escaped>`` partition dir name."""
+    return unquote(dir_name[len("run_id="):])
 
 
 def _iceberg_available(spark: SparkSession) -> bool:
@@ -128,18 +135,14 @@ class ManifestStore:
         # parallelize an empty list and start Python tasks per read
         return self.spark.createDataFrame(self.spark.sparkContext.emptyRDD(), MANIFEST_SCHEMA)
 
-    def read(self) -> DataFrame:
-        if self._use_iceberg():
-            return self.spark.table(self.table)
-        fs, jvm = self._fs()
+    def _partitions(self, fs, jvm) -> list[str]:
+        """The store's escaped ``run_id=...`` dir names.  A dir without
+        them is either a fresh empty store (ok) or a pre-partitioning
+        legacy layout whose rows would silently read as empty (round-2
+        ADVICE) — fail loudly on the latter."""
+        names = self._run_partition_names(fs, jvm, self.path)
         base = jvm.org.apache.hadoop.fs.Path(self.path)
-        if not fs.exists(base):
-            return self._empty()
-        if not self._run_partition_names(fs, jvm, self.path):
-            # dir exists but has no run_id=* partitions: either a fresh
-            # empty store (ok) or a pre-partitioning legacy layout whose
-            # rows would silently read as empty (round-2 ADVICE) — fail
-            # loudly on the latter.
+        if not names and fs.exists(base):
             children = [st.getPath().getName() for st in fs.listStatus(base)]
             if any(c.endswith(".parquet") for c in children):
                 raise ValueError(
@@ -147,6 +150,13 @@ class ManifestStore:
                     "found bare parquet files instead of run_id=* partitions; "
                     "migrate by reading the old layout and re-merging it"
                 )
+        return names
+
+    def read(self) -> DataFrame:
+        if self._use_iceberg():
+            return self.spark.table(self.table)
+        fs, jvm = self._fs()
+        if not self._partitions(fs, jvm):
             return self._empty()
         return self.spark.read.schema(MANIFEST_SCHEMA).parquet(self.path)
 
@@ -158,16 +168,23 @@ class ManifestStore:
             return [r["run_id"] for r in self.read().select("run_id").distinct().orderBy("run_id").collect()]
         fs, jvm = self._fs()
         names = self._run_partition_names(fs, jvm, self.path)
-        return sorted(unquote(n[len("run_id="):]) for n in names)
+        return sorted(map(_run_id, names))
 
     # -- writes ---------------------------------------------------------
 
-    def merge(self, rows: DataFrame, prefer_new: bool = True) -> None:
+    def merge(self, rows: DataFrame, prefer_new: bool = True,
+              run_ids: Iterable[str] | None = None) -> None:
         """Idempotent upsert keyed on (run_id, partition_id, algo).
 
         ``prefer_new=False`` reproduces ``INSERT OR IGNORE``
         (existing row wins, ``cache.py:313-319``); ``True`` is
         ``MERGE ... WHEN MATCHED THEN UPDATE`` semantics.
+
+        ``run_ids`` names every run_id in ``rows``; a caller that knows
+        them (the CLI, the streaming sink) passes them and saves the Spark
+        job that would otherwise collect them from ``rows``.  A row whose
+        run_id is missing from ``run_ids`` raises ``ValueError`` before
+        the store changes.
 
         Scale properties (parquet backend — the jar-less analog of the
         Iceberg ``MERGE INTO`` issued when jars are present):
@@ -182,13 +199,18 @@ class ManifestStore:
           ``max_by(struct(...), struct(priority, updated_at))``; the old
           union+dropDuplicates shape kept an arbitrary row per key
           (non-deterministic after shuffle), which could silently keep a
-          stale digest on exactly-once re-delivery.
+          stale digest on exactly-once re-delivery.  Manifest rows are
+          O(partitions), so the winners are picked in ONE task: no
+          shuffle, and one file per run partition.
         * **escape-safe partition swap** — the tmp dir's ``run_id=*``
           children are ENUMERATED, never reconstructed from raw run_id
           values: Spark percent-escapes special chars in partition paths
           (``:`` → ``%3A``…), so an ISO-timestamp run_id would otherwise
           never be found and its rows silently discarded (round-2
           ADVICE).
+        * **one tmp dir per call** — concurrent merges into one store
+          write to distinct ``<path>.tmp-merge-<uuid>`` dirs, each removed
+          when its merge ends, failed or not.
         * **FS-API moves** — delete/rename go through Hadoop
           ``FileSystem``, so the same code runs on HDFS/S3A, not only a
           local POSIX mount.
@@ -202,35 +224,47 @@ class ManifestStore:
                            f"updated_at timestamp) USING iceberg PARTITIONED BY (run_id)")
             self.spark.sql(iceberg_merge_sql(self.table, "_manifest_updates", prefer_new))
             return
-        run_ids = [r["run_id"] for r in rows.select("run_id").distinct().collect()]
+        if run_ids is None:
+            run_ids = [r["run_id"] for r in rows.select("run_id").distinct().collect()]
+        run_ids = set(run_ids)
         if not run_ids:
             return
-        existing = self.read().filter(F.col("run_id").isin(run_ids))
-        new_t = rows.withColumn("_pri", F.lit(1 if prefer_new else 0))
-        old_t = existing.withColumn("_pri", F.lit(0 if prefer_new else 1))
+        fs, jvm = self._fs()
+        Path = jvm.org.apache.hadoop.fs.Path
+        base = self.path.rstrip("/")
+        touched = [n for n in self._partitions(fs, jvm) if _run_id(n) in run_ids]
+        both = rows.withColumn("_pri", F.lit(1 if prefer_new else 0))
+        if touched:
+            existing = (self.spark.read.schema(MANIFEST_SCHEMA).option("basePath", base)
+                        .parquet(*[f"{base}/{n}" for n in touched]))
+            both = both.unionByName(existing.withColumn("_pri", F.lit(0 if prefer_new else 1)))
         data_cols = [f.name for f in MANIFEST_SCHEMA.fields if f.name not in MANIFEST_KEY]
         merged = (
-            new_t.unionByName(old_t)
+            both.coalesce(1)
             .groupBy(*MANIFEST_KEY)
             .agg(F.max_by(F.struct(*data_cols), F.struct("_pri", "updated_at")).alias("_row"))
-            .select(*MANIFEST_KEY, *[F.col(f"_row.{c}").alias(c) for c in data_cols])
-            .select(*[f.name for f in MANIFEST_SCHEMA.fields])
+            .select(*[f.name if f.name in MANIFEST_KEY else f"_row.{f.name}"
+                      for f in MANIFEST_SCHEMA.fields])
         )
         # write the merged slice to a tmp dir, then swap ONLY the touched
         # run_id partition dirs (the read side must not be overwritten
         # while it is still an input of this plan)
-        tmp = self.path.rstrip("/") + ".tmp-merge"
-        merged.write.mode("overwrite").partitionBy("run_id").parquet(tmp)
-        fs, jvm = self._fs()
-        Path = jvm.org.apache.hadoop.fs.Path
-        fs.mkdirs(Path(self.path))
-        for name in self._run_partition_names(fs, jvm, tmp):
-            src = Path(tmp, name)
-            dst = Path(self.path, name)
-            if fs.exists(dst):
-                fs.delete(dst, True)
-            fs.rename(src, dst)
-        fs.delete(Path(tmp), True)
+        tmp = f"{base}.tmp-merge-{uuid.uuid4().hex}"
+        try:
+            merged.write.mode("overwrite").partitionBy("run_id").parquet(tmp)
+            written = self._run_partition_names(fs, jvm, tmp)
+            stray = sorted(set(map(_run_id, written)) - run_ids)
+            if stray:
+                raise ValueError(f"rows hold run_ids missing from run_ids=: {stray}")
+            fs.mkdirs(Path(self.path))
+            for name in written:
+                src = Path(tmp, name)
+                dst = Path(self.path, name)
+                if fs.exists(dst):
+                    fs.delete(dst, True)
+                fs.rename(src, dst)
+        finally:
+            fs.delete(Path(tmp), True)
 
     def migrate(self, prefer_new: bool = False, keep_backup: bool = True) -> int:
         """Migrate a pre-partitioning legacy store (bare ``part-*.parquet``
@@ -299,7 +333,7 @@ class ManifestStore:
         fs, jvm = self._fs()
         Path = jvm.org.apache.hadoop.fs.Path
         for name in self._run_partition_names(fs, jvm, self.path):
-            if unquote(name[len("run_id="):]) == run_id:
+            if _run_id(name) == run_id:
                 return bool(fs.delete(Path(self.path, name), True))
         return False
 

@@ -40,6 +40,7 @@ def validation_sink(
     row_count and every other stats-map entry; a stream whose partitions
     arrive whole (the intended layout) therefore ends with full-partition
     sketches."""
+    run_id = str(run_id)
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:
         if not batch_df.head(1):
@@ -50,8 +51,8 @@ def validation_sink(
         res = validate(batch_df, catalog=catalog, algo=algo, persist_violations=False,
                        with_sketches=with_sketches)
         try:
-            rows = manifest_rows(res, run_id=f"{run_id}", algo=algo, lineage=f"epoch={epoch_id}")
-            store.merge(rows, prefer_new=True)
+            rows = manifest_rows(res, run_id=run_id, algo=algo, lineage=f"epoch={epoch_id}")
+            store.merge(rows, prefer_new=True, run_ids=[run_id])
         finally:
             release(res.report)
 

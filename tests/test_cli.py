@@ -495,3 +495,60 @@ def test_validate_empty_report_summary_is_null(spark, tmp_path, capsys):
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["docs"] is None and out["violations"] is None
     assert out["quarantined"] == 2
+
+
+def test_validate_job_count(io_dirs, spark, tmp_path, capsys):
+    """One CLI validate with every sink runs a pinned number of Spark
+    jobs: the violations write (scan, per-doc cache fill, catalog
+    broadcast and the AQE stages), the report collect and one manifest
+    write.  The merge takes the run_id it is given instead of collecting
+    it, and the export formats the report rows already collected, so
+    neither runs a job of its own (the count was 22 before)."""
+    sc = spark.sparkContext
+    sc.setJobGroup("cli-job-count", "validate with every sink")
+    try:
+        rc = main([
+            "validate", "--input", io_dirs["docs"], "--catalog", io_dirs["catalog"],
+            "--manifest", str(tmp_path / "m"), "--run-id", "jobs",
+            "--violations-out", str(tmp_path / "v"), "--export", str(tmp_path / "hash.json"),
+        ])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert rc == 0
+    capsys.readouterr()
+    assert len(sc.statusTracker().getJobIdsForGroup("cli-job-count")) == 16
+
+
+def test_spark_submit_master_is_kept(tmp_path):
+    """The CLI's session keeps the master (and any --conf) spark-submit
+    set before the CLI runs; the tuned defaults fill in the rest."""
+    import os
+    import subprocess
+    import sys
+
+    import pyspark
+
+    import hashio_spark
+
+    script = tmp_path / "which_master.py"
+    script.write_text(
+        "import argparse\n"
+        "from hashio_spark import cli\n"
+        "s = cli._spark(argparse.Namespace(master=None))\n"
+        "print('SESSION', s.sparkContext.master, s.conf.get('spark.sql.shuffle.partitions'),\n"
+        "      s.conf.get('spark.sql.session.timeZone'))\n"
+        "s.stop()\n"
+    )
+    root = os.path.dirname(os.path.dirname(hashio_spark.__file__))
+    env = dict(os.environ, PYSPARK_PYTHON=sys.executable, PYSPARK_DRIVER_PYTHON=sys.executable,
+               PYTHONPATH=os.pathsep.join(p for p in (root, os.environ.get("PYTHONPATH")) if p))
+    submit = os.path.join(os.path.dirname(pyspark.__file__), "bin", "spark-submit")
+    out = subprocess.run(
+        [submit, "--master", "local[1]", "--driver-memory", "512m",
+         "--conf", "spark.sql.shuffle.partitions=3", str(script)],
+        env=env, capture_output=True, text=True, timeout=300,
+    )
+    lines = [ln for ln in out.stdout.splitlines() if ln.startswith("SESSION ")]
+    assert lines, out.stderr[-2000:]
+    assert lines[0].split()[1:] == ["local[1]", "3", "UTC"]

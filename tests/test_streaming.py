@@ -1,9 +1,12 @@
 """Streaming incremental validation: micro-batches merge idempotently into
 the manifest store (the reference's periodic-merge checkpoint analog)."""
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
-from hashio_spark.sources.manifest_store import ManifestStore
+from hashio_spark.sources.manifest_store import MANIFEST_SCHEMA, ManifestStore
 from hashio_spark.streaming.incremental import stream_validation, violation_rate_stream
 
 
@@ -237,3 +240,63 @@ def test_expectation_monitor_stream(spark, tmp_path):
     assert not by_key[(0, 1)].passed  # 2 langs > 1
     assert by_key[(5, 1)].passed
     assert all(r.metric == "approx_distinct" for r in got if r.rule_id == 1)
+
+
+def _manifest(spark, rows):
+    """Manifest rows from (run_id, partition_id, digest, day of 2024-01) tuples."""
+    import datetime
+
+    return spark.createDataFrame(
+        [(r, p, "md5", d, 1, {"k": d}, "", datetime.datetime(2024, 1, day)) for r, p, d, day in rows],
+        MANIFEST_SCHEMA,
+    )
+
+
+@pytest.mark.parametrize("prefer_new", [True, False])
+def test_merge_with_run_ids_equals_merge_without(spark, tmp_path, prefer_new):
+    """Passing the run_ids skips the job that collects them and leaves the
+    same store: the within-rows dedupe (latest updated_at wins among
+    duplicate keys) and prefer_new against stored rows are unchanged."""
+    stored = _manifest(spark, [("r", 0, "old0", 1), ("r", 2, "old2", 1), ("s", 0, "s0", 1)])
+    # duplicate keys inside the update: (r, 0) twice, (t, 1) twice
+    update = _manifest(spark, [("r", 0, "new0a", 2), ("r", 0, "new0b", 3), ("r", 1, "new1", 2),
+                               ("t", 1, "t1a", 4), ("t", 1, "t1b", 2)])
+    got = []
+    for name, kw in (("auto", {}), ("given", {"run_ids": ["r", "t"]})):
+        store = ManifestStore(spark, str(tmp_path / name))
+        store.merge(stored)
+        store.merge(update, prefer_new=prefer_new, **kw)
+        got.append(sorted((r.run_id, r.partition_id, r.digest, r.updated_at, tuple(r.stats.items()))
+                          for r in store.read().collect()))
+    assert got[0] == got[1]
+    digests = {(r, p): d for r, p, d, *_ in got[0]}
+    assert digests[("r", 0)] == ("new0b" if prefer_new else "old0")
+    assert digests[("t", 1)] == "t1a"  # latest updated_at among the duplicates
+    assert digests[("r", 2)] == "old2" and digests[("s", 0)] == "s0"
+
+
+def test_merge_rejects_rows_outside_run_ids(spark, tmp_path):
+    """A run_id in rows that run_ids omits fails before the store changes
+    (its stored rows were never read, so swapping it in would drop them)."""
+    store = ManifestStore(spark, str(tmp_path / "m"))
+    store.merge(_manifest(spark, [("a", 0, "a0", 1), ("b", 0, "b0", 1)]))
+    with pytest.raises(ValueError, match="missing from run_ids"):
+        store.merge(_manifest(spark, [("a", 1, "a1", 2), ("b", 1, "b1", 2)]), run_ids=["a"])
+    assert sorted((r.run_id, r.partition_id) for r in store.read().collect()) == [("a", 0), ("b", 0)]
+    assert not [n for n in os.listdir(tmp_path) if ".tmp-merge" in n]
+
+
+def test_concurrent_merges_into_one_store(spark, tmp_path):
+    """Two threads merging different runs into one store each write their
+    own tmp dir: both runs land whole and no tmp dir is left behind."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    store = ManifestStore(spark, str(tmp_path / "m"))
+    runs = {rid: _manifest(spark, [(rid, p, f"{rid}{p}", 1) for p in range(8)]) for rid in ("a", "b")}
+    with ThreadPoolExecutor(2) as pool:
+        for f in [pool.submit(store.merge, rows, run_ids=[rid]) for rid, rows in runs.items()]:
+            f.result()
+    assert store.list_runs() == ["a", "b"]
+    got = sorted((r.run_id, r.partition_id, r.digest) for r in store.read().collect())
+    assert got == sorted((rid, p, f"{rid}{p}") for rid in runs for p in range(8))
+    assert not [n for n in os.listdir(tmp_path) if ".tmp-merge" in n]

@@ -3,6 +3,7 @@
 import json
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from hashio_spark.functions.text import (
@@ -148,3 +149,51 @@ def test_hash_json_empty_manifest_is_valid_json(spark, tmp_path):
     p = str(tmp_path / "empty.json")
     write_hash_json(df, p, "doc_id", "md5")
     assert read_hash_json(p) == {}
+
+
+_EXPORT_CASES = {
+    "empty": ("k string, digest string", []),
+    "non_ascii": ("k string, digest string",
+                  [("日本/ß.bin", "d1"), ("a.txt", "d2"), ("é", "d3"), ("Z", "d4")]),
+    # string order, not numeric: "1" < "10" < "2" < "33"
+    "int_keys": ("k int, digest string", [(2, "d2"), (10, "d10"), (33, "d33"), (1, "d1")]),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_EXPORT_CASES))
+@pytest.mark.parametrize("ext", ["json", "txt", "mhl"])
+def test_rows_and_dataframe_export_identical_bytes(spark, tmp_path, ext, case):
+    """An export from already collected rows (the CLI's path) writes the
+    same bytes as the export that collects the DataFrame itself."""
+    from hashio_spark.sources.exporters import EXPORTERS
+
+    schema, data = _EXPORT_CASES[case]
+    df = spark.createDataFrame(data, schema)
+    from_df, from_rows = tmp_path / f"df.{ext}", tmp_path / f"rows.{ext}"
+    EXPORTERS.write(df, str(from_df), "k", "md5")
+    EXPORTERS.write(df.collect(), str(from_rows), "k", "md5")
+    assert from_rows.read_bytes() == from_df.read_bytes()
+    keys = list(EXPORTERS.read(str(from_df), "md5"))  # file order
+    assert keys == sorted(str(k) for k, _ in data)
+    if case == "int_keys":
+        assert keys == ["1", "10", "2", "33"]
+
+
+def test_export_formatters_with_metadata(spark, tmp_path):
+    """The metadata columns (HASH.json meta fields, MHL size/mtime) come
+    out the same from rows as from the DataFrame."""
+    from hashio_spark.sources.exporters import write_hash_json, write_mhl
+
+    df = spark.createDataFrame(
+        [("b.wav", "aa", 200, 1700000100.0), ("a.mov", "bb", 100, 1700000000.0)],
+        "path string, digest string, size long, mtime double",
+    )
+    rows = df.collect()
+    for name, write in (
+        ("m.json", lambda d, p: write_hash_json(d, p, "path", "md5", meta_cols=("size",))),
+        ("m.mhl", lambda d, p: write_mhl(d, p, "path", size_col="size", mtime_col="mtime",
+                                         hashdate=1700000500)),
+    ):
+        write(df, str(tmp_path / f"df-{name}"))
+        write(rows, str(tmp_path / f"rows-{name}"))
+        assert (tmp_path / f"rows-{name}").read_bytes() == (tmp_path / f"df-{name}").read_bytes()
