@@ -42,16 +42,16 @@ _TABLE_CACHE: dict[tuple[int, str, str], DataFrame] = {}
 
 # Scan-parallelism floor (guide §2.2/§6): qualifying tables get one
 # round-robin exchange right after the scan.  The sandbox testdata is
-# single-file parquet with ONE row group for every table except lineitem —
-# parquet cannot be split below a row group, so the scan yields one task
-# and every expression-heavy pipeline above it (md5 shingle minhash,
-# set-similarity ordering, Arrow matmuls) runs serial while the other 31
-# cores idle (measured: dedupe_minhash_lsh 13.7 s at sf1.0, single scan
-# task).  Three gates, all derived from the input's footer metadata, not
-# from a local core count:
-#   * size ≤ MAX (64 MB): past that, natural splits exist and the scan
-#     parallelizes itself — exactly the small-input fix-up AQE coalescing
-#     performs in the other direction;
+# single-file parquet with ONE row group per table — parquet cannot be
+# split below a row group, so the scan yields one task and every
+# expression-heavy pipeline above it (md5 shingle minhash, set-similarity
+# ordering, Arrow matmuls) runs serial while the other cores idle
+# (measured: dedupe_minhash_lsh 13.7 s at sf1.0, single scan task).
+# Three gates, all read from the input's files and footers:
+#   * fewer row groups than defaultParallelism: with at least one row
+#     group per core the scan splits itself across every core (the
+#     session's 1 MiB openCostInBytes lets a file of a few MB reach one
+#     split per core), and the exchange would only move rows;
 #   * size ≥ MIN (4 MB): dimension tables carry so little work that the
 #     exchange is pure overhead (and several feed broadcast joins, where
 #     an exchange below the BroadcastExchange is a wasted shuffle);
@@ -65,35 +65,36 @@ _TABLE_CACHE: dict[tuple[int, str, str], DataFrame] = {}
 #     lineitem/orders/events cost +0.2-0.7 s per leg
 #     (latest_event_per_user 0.98 → 0.24 s WITHOUT the fan-out), while
 #     fanning documents/embeddings saves multiple seconds per leg.
-_FANOUT_MAX_BYTES = 64 * 1024 * 1024
 _FANOUT_MIN_BYTES = 4 * 1024 * 1024
 _FANOUT_MIN_ROW_BYTES = 64
 
 
-def _table_rows(path: str) -> int:
-    """Exact row count from the parquet footer metadata (driver-side,
-    milliseconds) — for sizing decisions that need n but not a scan
-    (e.g. the adaptive LSH band width).  Equivalent to Spark's own
-    metadata-only count; the footer count is exact by format contract."""
+def _table_files(path: str) -> list[str]:
+    """The data files of a parquet table as Spark lists them: the path
+    itself, or a directory's names that do not start with ``.`` or ``_``."""
+    if os.path.isdir(path):
+        return [os.path.join(path, f) for f in os.listdir(path) if not f.startswith((".", "_"))]
+    return [path]
+
+
+def _table_footer(path: str) -> tuple[int, int]:
+    """(rows, row groups) of a parquet table, summed over its footers
+    (driver-side, milliseconds) — for sizing decisions that need n but
+    not a scan (the fan-out gate, the adaptive LSH band width).  The
+    footer count is exact by format contract, as Spark's own
+    metadata-only count."""
     import pyarrow.parquet as pq
 
-    if os.path.isdir(path):
-        return sum(
-            pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-            for f in os.listdir(path)
-            if f.endswith(".parquet")
-        )
-    return pq.ParquetFile(path).metadata.num_rows
+    rows = groups = 0
+    for f in _table_files(path):
+        md = pq.ParquetFile(f).metadata
+        rows += md.num_rows
+        groups += md.num_row_groups
+    return rows, groups
 
 
 def _table_bytes(path: str) -> int:
-    if os.path.isdir(path):
-        return sum(
-            os.path.getsize(os.path.join(path, f))
-            for f in os.listdir(path)
-            if not f.startswith((".", "_"))
-        )
-    return os.path.getsize(path)
+    return sum(os.path.getsize(f) for f in _table_files(path))
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -104,9 +105,10 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     DataFrame (no persist: caching data would change what the bench
     catalog measures), so repeated queries share one resolved plan.
 
-    Small tables additionally get a round-robin fan-out exchange (see
-    ``_FANOUT_MAX_BYTES``) so single-row-group files don't serialize the
-    whole query on one scan task."""
+    A table with fewer row groups than cores additionally gets a
+    round-robin fan-out exchange (gates above ``_FANOUT_MIN_BYTES``) so
+    a single-row-group file doesn't serialize the whole query on one
+    scan task."""
     key = (id(spark), sf_dir, name)
     df = _TABLE_CACHE.get(key)
     if df is None:
@@ -115,12 +117,11 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         n = spark.sparkContext.defaultParallelism
         try:
             tb = _table_bytes(path)
-            fan = _FANOUT_MIN_BYTES <= tb <= _FANOUT_MAX_BYTES and tb >= _FANOUT_MIN_ROW_BYTES * max(
-                _table_rows(path), 1
-            )
+            rows, groups = _table_footer(path)
+            fan = groups < n and tb >= _FANOUT_MIN_BYTES and tb >= _FANOUT_MIN_ROW_BYTES * max(rows, 1)
         except OSError:
             fan = False
-        if fan and n > 1:
+        if fan:
             df = df.repartition(n)
         _TABLE_CACHE[key] = df
     return df
@@ -408,9 +409,10 @@ def _lsh_candidate_pairs(spark, sf_dir, with_sets: bool = False):
     dropped at the scan (``drop_short``): concat_ws's null-skip would
     otherwise co-band every short doc.  The persisted frame carries the
     four signatures — and, when ``with_sets``, the distinct shingle set —
-    so every consumer (band sizes, both self-join sides, a verify stage)
-    reads one materialization of the shingle+md5 pipeline instead of
-    recomputing it; both bands come from ONE pass (explode_bands)."""
+    so every consumer (the band-size count, the band rows it gates, a
+    verify stage) reads one materialization of the shingle+md5 pipeline
+    instead of recomputing it; both bands come from ONE pass
+    (explode_bands)."""
     enr = minhash_signature(spark, sf_dir, drop_short=True, with_sets=with_sets).persist()
     pairs = band_self_join(_md5_bands(enr), _MD5_MAX_BAND)
     return pairs.withColumnsRenamed({"key_a": "doc_a", "key_b": "doc_b"}), enr
@@ -1075,7 +1077,7 @@ def embedding_neardup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hashio_spark.operators.similarity import banded_sign_vals, dot_arrow
 
     e = _emb_double(spark, sf_dir)
-    bits = _scaled_bits(_table_rows(f"{sf_dir}/embeddings.parquet"))
+    bits = _scaled_bits(_table_footer(f"{sf_dir}/embeddings.parquet")[0])
     nrm = F.sqrt(F.aggregate(F.transform(F.col("ve"), lambda x: x * x), F.lit(0.0), lambda a, v: a + v))
     planes = [[float(w) for w in p] for p in _SCALED_PLANES[: _SCALED_BANDS * bits]]
     base = e.select("vec_id", "ve", nrm.alias("nrm")).persist()

@@ -23,11 +23,22 @@ _DRIVER_MEMORY_SHARE = 0.5
 # Scan split ceiling, spark.sql.files.maxPartitionBytes (guide §6).  The
 # sample data is single-file parquet whose row groups cap scan parallelism
 # anyway (≤6 row groups at sf1.0), so 16m only un-glues the 128m default's
-# 1-2-task scans of the mid-size tables.  A deployment with many large
-# files raises it to 128m-1g (guide §6 recommends larger splits for big
-# sequential scans) through ``get_spark(extra_conf=...)`` or
-# ``spark.conf.set``.
+# 1-2-task scans of the mid-size tables.  Below 16 MiB of input per core
+# (both perfbench inputs) the split is the bytes per core and this ceiling
+# does not bind; whether 128m costs anything is not measured yet.  A
+# deployment with many large files raises it to 128m-1g (guide §6
+# recommends larger splits for big sequential scans) through
+# ``get_spark(extra_conf=...)`` or ``spark.conf.set``.
 _MAX_PARTITION_BYTES = "16m"
+
+# spark.sql.files.openCostInBytes, the bytes a scan charges for opening a
+# file.  Spark sizes a split as max(openCost, bytes per core), so its 4 MiB
+# default keeps a file under ~4 MiB × cores from reaching one split per
+# core: an 8.4 MB, 16-row-group file scanned in 3 tasks (10,000, 8,750
+# and 1,250 docs) on 4 cores.  At 1 MiB it gets 4 tasks of 3,750–6,250
+# docs, and 16 files of ~1.5 MB pack 4 per task instead of 3 (6 tasks,
+# two waves on 4 cores).
+_OPEN_COST_BYTES = str(1 << 20)
 
 
 def host_cores() -> int:
@@ -85,6 +96,7 @@ def get_spark(
         "spark.master": f"local[{cores}]",
         "spark.sql.shuffle.partitions": str(shuffle_partitions),
         "spark.sql.files.maxPartitionBytes": _MAX_PARTITION_BYTES,
+        "spark.sql.files.openCostInBytes": _OPEN_COST_BYTES,
         "spark.default.parallelism": str(cores),
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",

@@ -36,6 +36,59 @@ def test_band_self_join_cap_and_singletons(spark):
     assert pairs == [("a0", "a1"), ("a0", "a2"), ("a1", "a2")]
 
 
+def _join_form(bands, max_band):
+    """The former band-row self-join form of ``band_self_join``."""
+    on = ["band_id", "band_val"]
+    sizes = bands.groupBy(*on).agg(F.count(F.lit(1)).alias("n"))
+    ok = bands.join(sizes.filter((F.col("n") > 1) & (F.col("n") <= max_band)), on)
+    a = ok.select(F.col("key").alias("key_a"), *on)
+    b = ok.select(F.col("key").alias("key_b"), *on)
+    return a.join(b, on).filter(F.col("key_a") < F.col("key_b")).select("key_a", "key_b").distinct()
+
+
+# (key, band_id, band_val); keys 10 and 2 order differently as strings
+_GROUPED_ROWS = (
+    [(1, 0, "rep"), (1, 0, "rep"), (2, 0, "rep")]  # a key twice in one band: n = max_band rows
+    + [(1, 1, "rep"), (1, 1, "rep"), (2, 1, "rep"), (3, 1, "rep")]  # same, n = max_band + 1: dropped
+    + [(None, 0, "nul"), (4, 0, "nul"), (5, 0, "nul")]  # a NULL key counts in n, pairs with nothing
+    + [(None, 1, "nul"), (4, 1, "nul"), (5, 1, "nul"), (6, 1, "nul")]  # ... and can push n past the cap
+    + [(10, 0, "two"), (2, 0, "two"), (10, 2, "two"), (2, 2, "two")]  # one pair sharing two bands
+    + [(7, 2, "full"), (8, 2, "full"), (9, 2, "full")]  # n = max_band: kept
+    + [(20, 2, "over"), (21, 2, "over"), (22, 2, "over"), (23, 2, "over")]  # n = max_band + 1: dropped
+    + [(30, 0, "solo"), (31, 1, "solo")]  # same value, different band_id: no pair
+)
+
+
+@pytest.mark.parametrize("key_type", ["bigint", "string"])
+def test_band_self_join_matches_join_form(spark, key_type):
+    cast = (lambda k: k) if key_type == "bigint" else str
+    rows = [(None if k is None else cast(k), b, v) for k, b, v in _GROUPED_ROWS]
+    bands = spark.createDataFrame(rows, f"key {key_type}, band_id int, band_val string")
+    got = sorted(tuple(r) for r in band_self_join(bands, MAX_BAND).collect())
+    want = sorted(tuple(r) for r in _join_form(bands, MAX_BAND).collect())
+    assert got == want
+    pairs = [(1, 2), (4, 5), (2, 10), (7, 8), (7, 9), (8, 9)]
+    assert got == sorted(tuple(sorted((cast(a), cast(b)))) for a, b in pairs)
+
+
+def test_band_self_join_plan_is_one_grouped_pass(spark):
+    """Band sizes are counted once, each band's keys are collected once,
+    below the collect sits the size gate's join (so a band over the cap
+    never reaches a list), and no join pairs band rows (a self-join
+    pushes ``key_a < key_b`` into its join condition)."""
+    bands = spark.createDataFrame([(1, 0, "v")], "key bigint, band_id int, band_val string")
+    plan = _plan(band_self_join(bands, MAX_BAND))
+    assert len(re.findall(r"\bcount\(1\)", plan)) == 1, plan
+    assert len(re.findall(r"\bcollect_list\(", plan)) == 1, plan
+    assert plan.index("collect_list(") < plan.index("Join Inner") < plan.index("count(1)"), plan
+    assert not _pair_joins(plan), plan
+    assert _pair_joins(_plan(_join_form(bands, MAX_BAND)))  # the detector sees the former self-join
+
+
+def _pair_joins(plan: str) -> list[str]:
+    return [ln for ln in plan.splitlines() if re.search(r"\bJoin\b.*key_a#\d+L? < key_b#\d+", ln)]
+
+
 def test_band_bipartite_join_gate(spark):
     train = _bands(spark, (
         [("t0", 0, "solo")]  # a train band of size 1 still pairs
